@@ -50,6 +50,7 @@ across rounds.
 from __future__ import annotations
 
 import json
+import math
 import os
 import sys
 import time
@@ -176,8 +177,6 @@ def _pctl(sorted_vals: list[float], q: float) -> float:
     ``int(n * 0.95)``) overshoot by one order statistic whenever q·n
     is integral — p50 of 10 values read the 6th, p95 of 20 read the
     max (round-6 review finding)."""
-    import math
-
     n = len(sorted_vals)
     return sorted_vals[max(0, min(n - 1, math.ceil(q * n) - 1))]
 
@@ -503,10 +502,11 @@ def main() -> None:
         ),
         3,
     )
-    sf_txt = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     try:
-        sf = float(sf_txt)
+        sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
     except ValueError:
+        sf = None
+    if sf is not None and not (math.isfinite(sf) and sf > 0):
         sf = None
     # Full detail → sidecar files + stderr above; the FINAL stdout line
     # stays compact so the driver's 2000-char tail capture always
@@ -523,19 +523,30 @@ def main() -> None:
         "stream_batch_ms": stream_batch_ms,
         "errors": errors,
     }
+    # The per-run name is built from the PARSED scale factor, so an sf
+    # dir whose name is not a positive number gets no per-run sidecar
+    # (only bench_detail_last.json) instead of a new file named after
+    # whatever the env var held.
     repo_dir = os.path.dirname(os.path.abspath(__file__))
-    detail_file = os.path.join(repo_dir, f"bench_detail_sf{sf_txt}_c{cpus}.json")
-    try:
-        with open(detail_file, "w", encoding="utf-8") as f:
-            json.dump(detail, f, indent=1, sort_keys=True)
-        with open(
-            os.path.join(repo_dir, "bench_detail_last.json"), "w", encoding="utf-8"
-        ) as f:
-            json.dump(detail, f, indent=1, sort_keys=True)
-    except OSError as exc:
-        print(f"# sidecar write failed: {exc}", file=sys.stderr)
-        detail_file = None
-    print(f"# detail_file: {detail_file}", file=sys.stderr)
+    detail_file = (
+        os.path.join(repo_dir, f"bench_detail_sf{sf:g}_c{cpus}.json")
+        if sf is not None
+        else None
+    )
+    for label, path in (
+        ("detail_file", detail_file),
+        ("detail_last", os.path.join(repo_dir, "bench_detail_last.json")),
+    ):
+        if path is None:
+            print(f"# {label}: skipped (sf dir {sf_dir!r} names no scale "
+                  "factor)", file=sys.stderr)
+            continue
+        try:
+            with open(path, "w", encoding="utf-8") as f:
+                json.dump(detail, f, indent=1, sort_keys=True)
+            print(f"# {label}: {path}", file=sys.stderr)
+        except OSError as exc:
+            print(f"# {label} write failed: {exc}", file=sys.stderr)
     print(f"# detail: {json.dumps(detail)}", file=sys.stderr)
     out = {
         "metric": "headline_queries_total_wall",

@@ -21,11 +21,7 @@ quasi-cliques), so diameters are tiny — 3-5 rounds in practice.
   without it the plan doubles each iteration and the job dies on
   driver-side planning long before data size matters;
 * convergence is detected with a 1-row aggregate (sum of labels,
-  monotonically non-increasing), not a full frame comparison;
-* for adversarial graphs (long chains) switch to the large-star /
-  small-star algorithm [Kiveris et al., "Connected Components in
-  MapReduce and Beyond", SoCC'14] — same join primitive, O(log²n)
-  rounds; not needed for quasi-clique dup graphs.
+  monotonically non-increasing), not a full frame comparison.
 """
 
 from __future__ import annotations
@@ -306,80 +302,3 @@ def kept_corpus_stats(documents: DataFrame, pairs: DataFrame) -> DataFrame:
         )
     )
 
-
-def connected_components_star(
-    nodes: DataFrame, edges: DataFrame, max_iter: int = 30, stats: dict | None = None
-) -> DataFrame:
-    """Alternating large-star / small-star connected components
-    [Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14] — O(log² n) rounds on ANY graph shape, vs O(diameter)
-    for plain min-label propagation. This is the variant for
-    chain-shaped graphs; for quasi-clique dup graphs the simple
-    propagation converges faster in wall-clock (fewer, cheaper
-    rounds — see PLANS.md measurements).
-
-    large-star: every node's larger neighbors re-attach to the
-    minimum of its neighborhood; small-star: the smaller neighbors
-    (and the node itself) do. Each round is one groupBy + one join on
-    the edge list; edges monotonically move toward (node → component
-    root) stars, detected via a stable (count, checksum) pair.
-    """
-    e = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v")
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-    prev_sig = None
-    rounds = 0
-    for _ in range(max_iter):
-        # --- large-star: (u,v) symmetric; larger neighbors -> min ---
-        sym = e.select("u", "v").union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = sym.groupBy("u").agg(F.min("v").alias("m"))
-        mins = mins.select("u", F.least("u", "m").alias("m"))
-        ls = (
-            sym.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        e = (
-            ls.union(e)
-            .filter(F.col("u") != F.col("v"))
-            .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-            .distinct()
-            .localCheckpoint()
-        )
-        # --- small-star: smaller neighbors (and u) -> min -----------
-        mins = e.groupBy("u").agg(F.min("v").alias("m"))
-        ss_children = (
-            e.join(mins, "u")
-            .filter(F.col("v") != F.col("m"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        ss_self = mins.select("u", F.col("m").alias("v"))
-        e = (
-            ss_children.union(ss_self)
-            .filter(F.col("u") != F.col("v"))
-            .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-            .distinct()
-            .localCheckpoint()
-        )
-        rounds += 1
-        sig = tuple(
-            e.agg(
-                F.count("*"), F.sum("u"), F.sum("v")
-            ).collect()[0]
-        )
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-    if stats is not None:
-        stats["rounds"] = rounds
-    # After convergence e is a star forest: u -> component root v.
-    roots = e.select(F.col("u").alias("node"), F.col("v").alias("cluster_id"))
-    return (
-        nodes.join(roots, "node", "left")
-        .select("node", F.coalesce("cluster_id", "node").alias("cluster_id"))
-    )

@@ -9,7 +9,7 @@ code inside the task (§4.2): this module compiles a ~100-line C
 translation of the *same* table-driven loops `multimodal/jpeg.py`
 runs in Python — one 16-bit-lookahead LUT probe per symbol, identical
 control flow, identical error semantics — with the system C compiler,
-once per host, cached in the temp dir keyed by source hash.
+once per host and user, cached keyed by source hash.
 
 Strictly optional: if no compiler is present, compilation fails, or
 ``SPARK_GRAFT_NATIVE=0``, every caller falls back to the pure-Python
@@ -19,6 +19,14 @@ pins byte-identical coefficients across random frames). Spark's local
 Python workers share the compiled artifact through the cache path; the
 ``os.replace`` publish is atomic, so racing workers compile at most
 once each and all land on the same file.
+
+The cache is trusted only as far as it is private: it lives in a
+per-user directory (``bdes_native-<uid>`` under the temp dir) that must
+be owned by this user with mode 0700, and the library's sha256 —
+recorded beside it at compile time — is checked before every load. A
+file that fails the check (planted, truncated, or from a racing
+compile) is recompiled, never loaded; a directory that fails the owner
+or mode check disables the native path.
 """
 
 from __future__ import annotations
@@ -26,6 +34,7 @@ from __future__ import annotations
 import ctypes
 import hashlib
 import os
+import stat
 import subprocess
 import tempfile
 
@@ -242,9 +251,57 @@ _lib = None
 _tried = False
 
 
+def _cache_path() -> str:
+    """Where the compiled library for this source lives. Creates the
+    per-user cache directory (mode 0700) if needed and raises
+    PermissionError unless it is a real directory owned by this user
+    that no one else can read or write."""
+    uid = os.getuid()
+    cache_dir = os.path.join(tempfile.gettempdir(), f"bdes_native-{uid}")
+    os.makedirs(cache_dir, mode=0o700, exist_ok=True)
+    st = os.lstat(cache_dir)
+    if not stat.S_ISDIR(st.st_mode) or st.st_uid != uid or st.st_mode & 0o077:
+        raise PermissionError(f"untrusted native cache dir {cache_dir}")
+    tag = hashlib.sha256(_SRC.encode()).hexdigest()[:16]
+    return os.path.join(cache_dir, f"native_{tag}.so")
+
+
+def _sha256(path: str) -> str:
+    with open(path, "rb") as f:
+        return hashlib.sha256(f.read()).hexdigest()
+
+
+def _verified(so: str) -> bool:
+    """True when ``so`` exists and matches the digest recorded for it."""
+    try:
+        with open(f"{so}.sha256", encoding="ascii") as f:
+            return f.read().strip() == _sha256(so)
+    except OSError:
+        return False
+
+
+def _compile(so: str) -> None:
+    """Compile the source to ``so`` and record its digest; both files
+    are published with an atomic rename."""
+    tmp = f"{so}.{os.getpid()}.tmp"
+    with tempfile.TemporaryDirectory() as td:
+        src = os.path.join(td, "native.c")
+        with open(src, "w", encoding="utf-8") as f:
+            f.write(_SRC)
+        subprocess.run(
+            ["cc", "-O2", "-shared", "-fPIC", "-o", tmp, src],
+            check=True, capture_output=True, timeout=120,
+        )
+    with open(f"{tmp}.sha256", "w", encoding="ascii") as f:
+        f.write(_sha256(tmp))
+    os.replace(tmp, so)
+    os.replace(f"{tmp}.sha256", f"{so}.sha256")
+
+
 def get_lib():
     """The loaded shared library, or None when the native path is
-    unavailable (no compiler, compile error, SPARK_GRAFT_NATIVE=0).
+    unavailable (no compiler, compile error, untrusted cache directory,
+    SPARK_GRAFT_NATIVE=0).
     Resolved once per process; every failure mode falls back."""
     global _lib, _tried
     if _tried:
@@ -253,20 +310,12 @@ def get_lib():
     if os.environ.get("SPARK_GRAFT_NATIVE", "1") == "0":
         return None
     try:
-        tag = hashlib.sha256(_SRC.encode()).hexdigest()[:16]
-        cache = os.path.join(tempfile.gettempdir(), f"bdes_native_{tag}.so")
-        if not os.path.exists(cache):
-            with tempfile.TemporaryDirectory() as td:
-                src = os.path.join(td, "native.c")
-                with open(src, "w", encoding="utf-8") as f:
-                    f.write(_SRC)
-                tmp = f"{cache}.{os.getpid()}.tmp"
-                subprocess.run(
-                    ["cc", "-O2", "-shared", "-fPIC", "-o", tmp, src],
-                    check=True, capture_output=True, timeout=120,
-                )
-                os.replace(tmp, cache)  # atomic publish across workers
-        lib = ctypes.CDLL(cache)
+        so = _cache_path()
+        if not _verified(so):
+            _compile(so)
+            if not _verified(so):
+                raise OSError(f"{so} changed after compiling")
+        lib = ctypes.CDLL(so)
         u8p = ctypes.POINTER(ctypes.c_uint8)
         i32p = ctypes.POINTER(ctypes.c_int32)
         i64p = ctypes.POINTER(ctypes.c_int64)

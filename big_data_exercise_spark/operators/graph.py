@@ -35,7 +35,7 @@ graph whose whole edge list moves in well under a second, and the
 integer arithmetic makes the numpy replay EXACT (sums of non-negative
 int64 are order-independent; ``//`` == ``DIV`` on non-negatives), so
 the gate changes the wall, never the output — pinned by
-``test_pagerank_driver_gate_equivalence``.
+``test_pagerank_driver_replay_equivalence``.
 """
 
 from __future__ import annotations
@@ -119,18 +119,12 @@ def _driver_pagerank(sym: DataFrame, iters: int, top: int) -> DataFrame | None:
     )
 
 
-def pagerank(
-    edges: DataFrame,
-    iters: int = 3,
-    top: int = 20,
-    driver_gate: int | None = None,
-) -> DataFrame:
+def pagerank(edges: DataFrame, iters: int = 3, top: int = 20) -> DataFrame:
     """Top-``top`` nodes by damped PageRank after ``iters`` power
     iterations. Output: (kind, entity_id, rank) ordered by rank desc
     with a total deterministic tie-break on the interleaved node id.
-    ``driver_gate`` overrides ``SPARK_GRAFT_DRIVER_PR_EDGES`` (edge
-    rows at or below it are solved on the driver; pass 0 to force the
-    distributed loop — the test hook)."""
+    Symmetric edge lists of at most ``SPARK_GRAFT_DRIVER_PR_EDGES``
+    rows are solved on the driver; 0 forces the distributed loop."""
     flip = edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     # bipartite + distinct input ⇒ the flipped set is disjoint (id
     # parity differs), so a plain union IS the symmetric closure.
@@ -140,7 +134,6 @@ def pagerank(
     # (job-count probe: 32 jobs at sf0.01 with eager rounds; the
     # unrolled lineage is bounded by the fixed iteration count).
     sym = edges.union(flip).localCheckpoint(eager=False)
-    gate = _DRIVER_PR_EDGES if driver_gate is None else driver_gate
     # Gate probe: a FULL count, deliberately (round-12 advice item
     # considered and measured): the count's job is what materializes
     # the lazy checkpoint blocks that the driver transfer — or the
@@ -150,7 +143,7 @@ def pagerank(
     # gathers the first million rows into one task) and, worse, it
     # materializes only the partitions the limit touched — the
     # toPandas then re-runs the orders⋈lineitem lineage for the rest.
-    if gate > 0 and sym.count() <= gate:
+    if _DRIVER_PR_EDGES > 0 and sym.count() <= _DRIVER_PR_EDGES:
         res = _driver_pagerank(sym, iters, top)
         if res is not None:
             return res  # None → negative node ids → relational loop

@@ -3281,20 +3281,18 @@ def _specs() -> list[QuerySpec]:
     ))
     s.append(QuerySpec(
         "pq_topk",
-        # arrow_encode: the (vid, sub) -> cid assignments ride the
+        # Training and encode assign (vid, sub) -> cid with the
         # broadcast-codebook Arrow kernel instead of the kcent x
         # join-fan-out relational form. Round-12 quiet interleaved
-        # A/B (tools/ab_r12.py, best-of-N, flag off vs on): 1.11x at
-        # 32 cores / 1.22x at 8 for this toy config, 1.33x / 1.81x
-        # for the PQ64 production config — the round-11 in-code claim
-        # ("5.9 -> 3.8 s") was a dev-time number taken after the
-        # close-out bench and is superseded by these committed
-        # measurements. Bit-identical by construction AND by test
-        # (test_pq_arrow_encode_bit_identical_and_cap_wiring, ragged
-        # rows included since round 12); the oracle SQL below still
-        # unrolls the relational definition, so the hash check is a
-        # true cross-engine, cross-algorithm comparison.
-        lambda sp, d: pq.pq_topk(_t(sp, d, "embeddings"), arrow_encode=True),
+        # A/B (best-of-N, kernel vs relational): 1.11x at 32 cores /
+        # 1.22x at 8 for this toy config, 1.33x / 1.81x for the PQ64
+        # production config (OPTIMIZATION_r12.md). Bit-identical by
+        # construction AND by test
+        # (test_pq_arrow_kernel_bit_identical_and_cap_wiring, ragged
+        # rows included); the oracle SQL below unrolls the relational
+        # definition, so the hash check is a true cross-engine,
+        # cross-algorithm comparison.
+        lambda sp, d: pq.pq_topk(_t(sp, d, "embeddings")),
         pq.pq_sql(),
         ("similarity", "pq", "ann"),
         "product-quantization ANN: per-sub-space integer Lloyd codebooks, "
@@ -3324,20 +3322,15 @@ def _specs() -> list[QuerySpec]:
     ))
     s.append(QuerySpec(
         "kmeans_clusters",
-        # arrow_assign=False (round 12): the round-11 Arrow-kernel flip
-        # landed after the close-out bench; the round-12 quiet
-        # interleaved A/B measured it LOSING at this k=8 toy config —
-        # 0.81x at 32 cores, 0.69x at 8 (best-of-N, tools/ab_r12.py;
-        # /tmp committed in OPTIMIZATION_r12.md) — because three
-        # mapInPandas stages + centroid collects cost more than the
-        # mere 8x relational fan-out they replace. The kernel stays
-        # (ragged-exact since round 12, equivalence pinned by
-        # test_kmeans_arrow_assign_bit_identical) for wide-k callers;
-        # pq_topk keeps it at kcent=256, where the same A/B measures
-        # it 1.2-1.8x FASTER.
-        lambda sp, d: kmeans.kmeans_assignments(
-            _t(sp, d, "embeddings"), arrow_assign=False
-        ),
+        # Relational assignment only: the round-12 quiet interleaved
+        # A/B measured a numpy Arrow-kernel assign LOSING at this k=8
+        # config — 0.81x at 32 cores, 0.69x at 8 (best-of-N,
+        # OPTIMIZATION_r12.md) — because three mapInPandas stages +
+        # centroid collects cost more than the mere 8x relational
+        # fan-out they replace, so the kernel was deleted. pq_topk
+        # keeps its kernel: at kcent=256 the same A/B measures it
+        # 1.2-1.8x FASTER.
+        lambda sp, d: kmeans.kmeans_assignments(_t(sp, d, "embeddings")),
         kmeans.kmeans_sql(),
         ("similarity", "iterative", "clustering"),
         "Lloyd's k-means (2 updates + final assign) in fixed-point integer "

@@ -19,7 +19,7 @@ A SQL oracle can therefore replay the whole loop bit-for-bit with
 unrolled CTEs (plans/registry.py generates it per iteration count).
 
 Scale shape (100 TB): the long form shuffles once at build; each
-iteration is one broadcast join (centroids are k x n_dims rows — tiny
+iteration is one broadcast join (centroids are k x dims rows — tiny
 by definition) + two aggregations keyed on (vid, cid) / (cid, dim).
 No all-pairs, no driver collect; per-round lineage is cut with
 localCheckpoint (cluster deployments: persist(DISK_ONLY) or a
@@ -76,135 +76,17 @@ def _update(long_df: DataFrame, assign_df: DataFrame) -> DataFrame:
     )
 
 
-def _quantize_batch(emb, width):
-    """(Q, M) fixed-point quantization of a pandas object column of
-    vectors into a dense (n, width) float64 matrix plus a 0/1 presence
-    mask — shared by the kmeans and PQ Arrow kernels. Replicates
-    ``quantized_long``'s posexplode semantics exactly: a NULL (or
-    empty) array contributes no dims; a SHORT or LONG array
-    contributes exactly its own dims (dims ≥ ``width`` cannot match
-    any centroid dim and are cut); a NULL *element* is treated as an
-    absent dim (the relational SUM skips the NULL term — equivalent
-    whenever at least one non-NULL term overlaps; the all-NULL-terms
-    corner, where the relational dist degrades to NULL, is outside
-    every tested corpus and documented here rather than emulated)."""
-    import numpy as np
-
-    n = len(emb)
-    Q = np.zeros((n, width), dtype=np.float64)
-    M = np.zeros((n, width), dtype=np.float64)
-    for j, v in enumerate(emb):
-        if v is None:
-            continue
-        L = min(len(v), width)
-        if not L:
-            continue
-        a = np.asarray(v[:L], dtype=np.float64)
-        present = ~np.isnan(a)
-        q = np.floor((a + 1.0) * QSCALE)  # == quantized_long, exact
-        Q[j, :L] = np.where(present, q, 0.0)
-        M[j, :L] = present
-    return Q, M
-
-
-def _assign_arrow(
-    embeddings: DataFrame, cents: DataFrame, n_dims: int = 64
-) -> DataFrame:
-    """(vid, cid, dist) nearest-centroid assignment via a
-    broadcast-codebook numpy kernel — the same construction as
-    ``pq._codes_arrow`` and bit-identical to :func:`_assign` on ANY
-    corpus, ragged rows included (round-12, advice item): the distance
-    is summed over the INTERSECTION of the vector's dims and the
-    centroid's dims, exactly what the relational join on ``dim``
-    computes, via presence masks —
-
-        dist = (Q·Q) @ P.T − 2·(Q @ C.T) + M @ (C·C).T
-
-    with Q/M the quantized batch + its presence mask and C/P the
-    centroid matrix + its dim-presence mask. Every intermediate is an
-    integer < 2⁵³ (|q| ≤ 3·QSCALE even on fuzz corpora, so diff² ≤
-    3.6e13 and a 64-dim sum ≤ 2.4e15), so the float64 matmul is exact,
-    and ``np.argmin``'s first-hit over cid-ascending rows IS
-    struct-min's lowest-cid tie-break. (vid, cid) pairs with ZERO
-    overlapping dims produce no join row relationally — masked to +inf
-    here; a vid overlapping no centroid at all drops, as does a NULL
-    embedding (posexplode of NULL yields nothing). The centroid
-    collect is bounded: ≤ k·n_dims rows (512 at the registry
-    config)."""
-    import numpy as np
-
-    crows = cents.select("cid", "dim", "qc").collect()
-    # size the matrices to the centroids' real dim span: a centroid dim
-    # beyond n_dims (possible when training vectors run long) keeps its
-    # relational join semantics instead of crashing the fill below
-    width = max(n_dims, max((r["dim"] for r in crows), default=-1) + 1)
-    by_cid: dict = {}
-    for r in crows:
-        by_cid.setdefault(r["cid"], {})[r["dim"]] = r["qc"]
-    order = sorted(by_cid)
-    mat = np.zeros((len(order), width), dtype=np.float64)
-    pres = np.zeros((len(order), width), dtype=np.float64)
-    for i, cid in enumerate(order):
-        for dim, qc in by_cid[cid].items():
-            mat[i, dim] = qc
-            pres[i, dim] = 1.0
-    cid_arr = np.asarray(order, dtype=np.int32)
-    mat2 = mat * mat
-    dense = bool(len(order)) and pres.all()  # every centroid spans every dim
-
-    def assign(batches):
-        import pandas as pd
-
-        if not len(order):  # no centroids → relational join emits nothing
-            return
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            Q, M = _quantize_batch(pdf["embedding"].to_numpy(), width)
-            vids = pdf["vec_id"].to_numpy()
-            dist = (Q * Q) @ pres.T - 2.0 * (Q @ mat.T) + M @ mat2.T
-            if dense:
-                # fast path (every real corpus): full-width vectors
-                # overlap every centroid; only dim-less rows drop
-                valid = M.any(axis=1)
-            else:
-                overlap = M @ pres.T
-                np.copyto(dist, np.inf, where=overlap == 0.0)
-                valid = (overlap > 0.0).any(axis=1)
-            if not valid.all():
-                dist, vids = dist[valid], vids[valid]
-            if not len(vids):
-                continue
-            idx = np.argmin(dist, axis=1)
-            yield pd.DataFrame(
-                {
-                    "vid": vids,
-                    "cid": cid_arr[idx],
-                    "dist": dist[np.arange(len(idx)), idx].astype(np.int64),
-                }
-            )
-
-    return embeddings.select("vec_id", "embedding").mapInPandas(
-        assign, schema="vid long, cid int, dist long"
-    )
-
-
 def kmeans_assignments(
-    embeddings: DataFrame,
-    k: int = 8,
-    iters: int = 2,
-    arrow_assign: bool = False,
-    n_dims: int = 64,
+    embeddings: DataFrame, k: int = 8, iters: int = 2
 ) -> DataFrame:
     """(vec_id, cluster, dist) after ``iters`` Lloyd updates and a
     final assignment. Init: the vectors with the ``k`` smallest ids
     are the seed centroids (cluster = rank order) — deterministic, no
-    RNG to reconcile across engines. ``arrow_assign`` swaps every
-    assignment step's k×-fan-out broadcast join + two shuffle
-    aggregations for the bit-identical numpy kernel
-    (:func:`_assign_arrow`) over a bounded centroid collect — the
-    round-11 path the registry query uses; the relational form remains
-    the oracle's definition and the equivalence-test anchor."""
+    RNG to reconcile across engines. Every assignment step is the
+    relational broadcast join of :func:`_assign`, the same form
+    ``kmeans_sql`` unrolls. A ragged vector is assigned by the partial
+    distance over the dims it shares with each centroid; a NULL
+    embedding contributes no rows and drops out."""
     # Lazy checkpoints throughout (round 11): every table is still
     # materialized once and shared by all consumers, but inside the
     # consuming job instead of as per-round driver barriers (job-count
@@ -233,15 +115,10 @@ def kmeans_assignments(
         .select("cid", "dim", F.col("q").alias("qc"))
         .localCheckpoint(eager=False)
     )
-    step = (
-        (lambda c: _assign_arrow(embeddings, c, n_dims))
-        if arrow_assign
-        else (lambda c: _assign(long_df, c))
-    )
     for _ in range(iters):
-        assigned = step(cents)
+        assigned = _assign(long_df, cents)
         cents = _update(long_df, assigned).localCheckpoint(eager=False)
-    final = step(cents)
+    final = _assign(long_df, cents)
     return final.select(
         F.col("vid").alias("vec_id"),
         F.col("cid").cast("int").alias("cluster"),

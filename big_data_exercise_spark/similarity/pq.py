@@ -62,7 +62,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
-from big_data_exercise_spark.similarity.kmeans import quantized_long
+from big_data_exercise_spark.similarity.kmeans import QSCALE, quantized_long
 
 N_DIMS = 64
 M_SUBS = 4          # sub-spaces → dsub = 16 dims each
@@ -87,7 +87,9 @@ def _long_with_sub(embeddings: DataFrame, m: int, n_dims: int) -> DataFrame:
 
 def _assign(lf: DataFrame, cents: DataFrame) -> DataFrame:
     """Nearest centroid per (vid, sub): join on dim (dim implies sub),
-    integer squared-L2 per (vid, sub, cid), struct-min argmin."""
+    integer squared-L2 per (vid, sub, cid), struct-min argmin. The
+    relational definition ``pq_sql`` unrolls, and the reference the
+    Arrow kernel (:func:`_codes_arrow`) is tested against."""
     diff = F.col("q") - F.col("qc")
     dists = (
         lf.join(F.broadcast(cents.select("cid", "dim", "qc")), "dim")
@@ -99,16 +101,15 @@ def _assign(lf: DataFrame, cents: DataFrame) -> DataFrame:
 
 
 def pq_codebooks(
-    lf: DataFrame, k: int = K_CENTS, iters: int = ITERS, assign_fn=None
+    lf: DataFrame, assign_fn, k: int = K_CENTS, iters: int = ITERS
 ) -> DataFrame:
     """(sub, cid, dim, qc) codebooks for every sub-space, trained by
     ``iters`` integer Lloyd rounds. Seeds: the k smallest vids seed
     every sub-space (cid = seed rank — deterministic, no RNG).
-    ``assign_fn(cents) -> (vid, sub, cid, ...)`` overrides the
-    relational assignment step — the production path passes the
-    bit-identical Arrow kernel (:func:`_codes_arrow`) so training
-    avoids the kcent× join fan-out; the centroid-update aggregate is
-    shared either way."""
+    ``assign_fn(cents) -> (vid, sub, cid, ...)`` is the assignment
+    step: ``pq_topk`` passes the Arrow kernel (:func:`_codes_arrow`),
+    which avoids the kcent× join fan-out of the relational
+    :func:`_assign` and is bit-identical to it."""
     from big_data_exercise_spark.operators.windows import broadcast_prefix_offsets
 
     seeds = (
@@ -133,7 +134,7 @@ def pq_codebooks(
         .localCheckpoint(eager=False)
     )
     for _ in range(iters):
-        assigned = assign_fn(cents) if assign_fn is not None else _assign(lf, cents)
+        assigned = assign_fn(cents)
         cents = (
             lf.join(assigned.select("vid", "sub", "cid"), ["vid", "sub"])
             .groupBy("sub", "cid", "dim")
@@ -141,6 +142,36 @@ def pq_codebooks(
             .localCheckpoint(eager=False)
         )
     return cents
+
+
+def _quantize_batch(emb, width):
+    """(Q, M) fixed-point quantization of a pandas object column of
+    vectors into a dense (n, width) float64 matrix plus a 0/1 presence
+    mask. Replicates ``quantized_long``'s posexplode semantics exactly:
+    a NULL (or empty) array contributes no dims; a SHORT or LONG array
+    contributes exactly its own dims (dims ≥ ``width`` cannot match
+    any centroid dim and are cut); a NULL *element* is treated as an
+    absent dim (the relational SUM skips the NULL term — equivalent
+    whenever at least one non-NULL term overlaps; the all-NULL-terms
+    corner, where the relational dist degrades to NULL, is outside
+    every tested corpus and documented here rather than emulated)."""
+    import numpy as np
+
+    n = len(emb)
+    Q = np.zeros((n, width), dtype=np.float64)
+    M = np.zeros((n, width), dtype=np.float64)
+    for j, v in enumerate(emb):
+        if v is None:
+            continue
+        L = min(len(v), width)
+        if not L:
+            continue
+        a = np.asarray(v[:L], dtype=np.float64)
+        present = ~np.isnan(a)
+        q = np.floor((a + 1.0) * QSCALE)  # == quantized_long, exact
+        Q[j, :L] = np.where(present, q, 0.0)
+        M[j, :L] = present
+    return Q, M
 
 
 def _codes_arrow(embeddings: DataFrame, cents: DataFrame, m: int, n_dims: int) -> DataFrame:
@@ -156,8 +187,8 @@ def _codes_arrow(embeddings: DataFrame, cents: DataFrame, m: int, n_dims: int) -
     Bit-identical to ``_assign`` on ANY corpus, ragged rows included
     (round-12, advice item): per sub-space the distance is summed over
     the INTERSECTION of the vector's dims and the centroid's dims —
-    exactly what the relational join on ``dim`` computes — via the
-    same presence-mask form as ``kmeans._assign_arrow``
+    exactly what the relational join on ``dim`` computes — via
+    presence masks
     (dist = (X·X)@P.T − 2·X@C.T + M@(C·C).T, every intermediate an
     exact integer < 2⁵³ in float64), with ties broken to the lowest
     cid (argmin first-hit over cid-ascending codebooks ==
@@ -168,8 +199,6 @@ def _codes_arrow(embeddings: DataFrame, cents: DataFrame, m: int, n_dims: int) -
     dims beyond ``n_dims`` (training vectors that ran long) keep their
     relational semantics too."""
     import numpy as np
-
-    from big_data_exercise_spark.similarity.kmeans import _quantize_batch
 
     dsub = n_dims // m
     # Bounded collect: ≤ m·kcent·dsub rows (16384 at the PQ64 shape) —
@@ -242,7 +271,6 @@ def pq_topk(
     rerank: int = RERANK,
     train_mod: int = 1,
     train_cap: int | None = None,
-    arrow_encode: bool = False,
 ) -> DataFrame:
     """Top-``k`` per query (the ``n_queries`` smallest vec_ids) via
     PQ-ADC shortlist + exact re-rank. Output: (query_id, vec_id,
@@ -265,35 +293,19 @@ def pq_topk(
         n = embeddings.count()
         train_mod = -(-n // train_cap)  # ceil: sample ≈ n/train_mod ≤ cap
     train = lf.filter(F.col("vid") % train_mod == 0) if train_mod > 1 else lf
-    if arrow_encode:
-        # Same kernel for the training assignment (proven bit-identical
-        # to _assign): the Lloyd round otherwise pays the same kcent×
-        # join fan-out as the encode, on the training slice.
-        train_emb = (
-            embeddings.filter(F.col("vec_id") % train_mod == 0)
-            if train_mod > 1
-            else embeddings
-        )
-        cents = pq_codebooks(
-            train,
-            kcent,
-            iters,
-            assign_fn=lambda c: _codes_arrow(train_emb, c, m, n_dims),
-        )
-    else:
-        cents = pq_codebooks(train, kcent, iters)
-    # Encode: the one stage that touches every corpus vector at full
-    # codebook width. arrow_encode swaps the kcent×-fan-out relational
-    # join for the broadcast-codebook numpy kernel (bit-identical,
-    # property-tested). Both registry queries pass arrow_encode=True
-    # since round 11 (toy config: 5.9 → 3.8 s at sf0.1); the
-    # relational form remains as the oracle's definition — pq_sql()
-    # unrolls IT, so the hash check compares two independent
-    # algorithms — and as the property-test anchor.
-    if arrow_encode:
-        codes = _codes_arrow(embeddings, cents, m, n_dims)
-    else:
-        codes = _assign(lf, cents).select("vid", "sub", "cid")
+    train_emb = (
+        embeddings.filter(F.col("vec_id") % train_mod == 0)
+        if train_mod > 1
+        else embeddings
+    )
+    # Training and encode both assign with the broadcast-codebook
+    # Arrow kernel, bit-identical to the relational _assign
+    # (property-tested). The oracle, pq_sql(), unrolls the relational
+    # form, so the hash check compares two independent algorithms.
+    cents = pq_codebooks(
+        train, lambda c: _codes_arrow(train_emb, c, m, n_dims), kcent, iters
+    )
+    codes = _codes_arrow(embeddings, cents, m, n_dims)
 
     qlf = lf.filter(F.col("vid") < n_queries).select(
         F.col("vid").alias("qid"), "sub", "dim", F.col("q").alias("qq")
@@ -400,7 +412,6 @@ def pq_topk_prod(
         rerank=RERANK_PROD,
         train_mod=train_mod,
         train_cap=train_cap,
-        arrow_encode=True,
     )
 
 

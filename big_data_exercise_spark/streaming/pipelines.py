@@ -484,7 +484,7 @@ def require_rocksdb_state(spark: SparkSession) -> None:
     )
 
 
-class _state_partitions:
+class _sized_state_store:
     """Right-size streaming STATE partitioning for the duration of one
     query start. The number of state-store instances equals the
     shuffle-partition count at query start — and each instance pays
@@ -497,23 +497,30 @@ class _state_partitions:
     this; a restarted query keeps the count baked into its checkpoint.
     """
 
-    def __init__(self, spark: SparkSession, n: int):
-        self.spark, self.n = spark, n
+    def __init__(self, spark: SparkSession):
+        self.spark = spark
 
     def __enter__(self):
         self.saved = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
+        self.spark.conf.set(
+            "spark.sql.shuffle.partitions", str(_state_store_instances(self.spark))
+        )
 
     def __exit__(self, *exc):
         self.spark.conf.set("spark.sql.shuffle.partitions", self.saved)
 
 
-# Source-volume hint for the state-partition autotune: the file-based
+# Source-volume hint for the state-store autotune: the file-based
 # stream builders record their source's total bytes here at plan-build
 # time (a driver-side os.stat sum — no Spark job), and the next query
-# start derives its state-store instance count from it. Overwritten by
-# every builder call, so consecutive queries never see a stale value;
-# custom sources that never set it fall back to the fixed default.
+# start derives its state-store instance count from it. It is one
+# process-wide slot that every builder call overwrites, so it can be
+# stale: a plan built from two file sources is sized by whichever was
+# built last, a plan built before another query's sources reads that
+# query's bytes, and a plan on a custom source reads the last file
+# source built in the process. Perf-only — state partitioning never
+# changes results. None (nothing recorded, or a failed stat) falls back
+# to the fixed default.
 _LAST_SOURCE_BYTES: dict = {"bytes": None}
 
 # ~bytes of source input per state-store instance. Round-12 interleaved
@@ -543,16 +550,10 @@ def _note_source_bytes(path: str) -> None:
         _LAST_SOURCE_BYTES["bytes"] = None
 
 
-def _resolve_state_partitions(spark: SparkSession, requested: int | None) -> int:
-    """State-store instance count for one streaming query start:
-    explicit caller value > ``SPARK_GRAFT_STATE_PARTITIONS`` env >
-    source-volume derivation (min 2, max the batch shuffle width) >
-    the historical fixed 8."""
-    if requested is not None:
-        return requested
-    env = os.environ.get("SPARK_GRAFT_STATE_PARTITIONS")
-    if env:
-        return max(1, int(env))
+def _state_store_instances(spark: SparkSession) -> int:
+    """State-store instance count for one streaming query start: the
+    source-volume derivation (min 2, max the batch shuffle width), or
+    the historical fixed 8 when no source bytes are recorded."""
     try:
         width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except Exception:  # noqa: BLE001 — conf may be 'auto' on some builds
@@ -563,11 +564,7 @@ def _resolve_state_partitions(spark: SparkSession, requested: int | None) -> int
     return max(2, min(width, -(-nbytes // _STATE_BYTES_PER_INSTANCE)))
 
 
-def run_to_memory(
-    result: DataFrame,
-    output_mode: str = "complete",
-    state_partitions: int | None = None,
-) -> DataFrame:
+def run_to_memory(result: DataFrame, output_mode: str = "complete") -> DataFrame:
     """Execute a streaming plan to completion (availableNow semantics
     via processAllAvailable) into a memory sink; return the final
     table as a batch DataFrame.
@@ -588,7 +585,7 @@ def run_to_memory(
     prog_key = "spark.sql.streaming.numRecentProgressUpdates"
     saved_prog = spark.conf.get(prog_key, None)
     spark.conf.set(prog_key, "100000")
-    with _state_partitions(spark, _resolve_state_partitions(spark, state_partitions)):
+    with _sized_state_store(spark):
         q = (
             result.writeStream.format("memory")
             .queryName(name)
@@ -635,10 +632,7 @@ def run_foreach_batch_to_jdbc(
             batch_df, url, table, driver=driver or jdbcio.DERBY_DRIVER
         )
 
-    with _state_partitions(
-        result.sparkSession,
-        _resolve_state_partitions(result.sparkSession, None),
-    ):
+    with _sized_state_store(result.sparkSession):
         q = (
             result.writeStream.foreachBatch(write_batch)
             .outputMode("append")
@@ -734,10 +728,7 @@ def run_foreach_batch_to_parquet(
             "append"
         ).parquet(out)
 
-    with _state_partitions(
-        result.sparkSession,
-        _resolve_state_partitions(result.sparkSession, None),
-    ):
+    with _sized_state_store(result.sparkSession):
         q = (
             result.writeStream.foreachBatch(write_batch)
             .outputMode("append")

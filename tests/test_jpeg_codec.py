@@ -442,3 +442,43 @@ def test_native_entropy_decoder_matches_python():
         os.environ.pop("SPARK_GRAFT_NATIVE", None)
         _native._tried, _native._lib = False, None
     assert str(fast_exc.value) == str(slow_exc.value)
+
+
+def test_native_loader_rejects_planted_library(tmp_path, monkeypatch):
+    """A file planted where the loader caches the compiled library does
+    not match the digest recorded at compile time, so get_lib()
+    recompiles instead of loading it (or giving up on the fast path),
+    and the rebuilt library decodes byte-identically to Python. A cache
+    directory others can write to disables the native path."""
+    import os
+    import shutil
+    import tempfile
+
+    from big_data_exercise_spark.multimodal import _native
+
+    if shutil.which("cc") is None:
+        pytest.skip("no C compiler on this host")
+    monkeypatch.setenv("TMPDIR", str(tmp_path))
+    monkeypatch.setattr(tempfile, "tempdir", None)
+    monkeypatch.delenv("SPARK_GRAFT_NATIVE", raising=False)
+    monkeypatch.setattr(_native, "_tried", False)
+    monkeypatch.setattr(_native, "_lib", None)
+
+    so = _native._cache_path()
+    with open(so, "wb") as f:
+        f.write(b"not a shared library\n")
+    lib = _native.get_lib()
+    assert lib is not None
+    assert _native._verified(so)
+
+    img = np.random.default_rng(7).integers(0, 256, (24, 40, 3), dtype=np.uint8)
+    enc = encode_jpeg(img, quality=80)
+    fast = decode_jpeg(enc)
+    monkeypatch.setenv("SPARK_GRAFT_NATIVE", "0")
+    monkeypatch.setattr(_native, "_tried", False)
+    assert np.array_equal(fast, decode_jpeg(enc))
+
+    monkeypatch.delenv("SPARK_GRAFT_NATIVE")
+    monkeypatch.setattr(_native, "_tried", False)
+    os.chmod(os.path.dirname(so), 0o777)
+    assert _native.get_lib() is None

@@ -750,10 +750,11 @@ def test_embeddings_oracle_pair_random_corpus(spark, name):
 # DuckDB's flooring // agree in the centroid update (components in
 # [-2, 2] would fuzz THAT engine asymmetry, not the kernels). Ragged
 # 63-dim rows, the zero vector and whole-NULL embeddings stay in the
-# pool — the round-12 point of this lane: the registry paths run the
-# broadcast-codebook Arrow kernels (arrow_assign / arrow_encode), so
-# every example is a kernel-vs-relational-oracle comparison over
-# corpora where partial-dim assignment actually happens.
+# pool — the round-12 point of this lane: pq_topk runs the
+# broadcast-codebook Arrow kernel and kmeans_clusters the relational
+# assign, so every example compares each against the unrolled
+# relational oracle over corpora where partial-dim assignment
+# actually happens.
 ITERATIVE_EMB_FUZZED = ["kmeans_clusters", "pq_topk"]
 
 _COMPONENT_UNIT = st.integers(min_value=-256, max_value=256).map(

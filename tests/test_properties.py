@@ -577,7 +577,7 @@ def test_pq_prod_recall_and_exact_rerank(spark):
     assert np.mean(recs) >= 0.9, recs
 
 
-def test_pq_arrow_encode_bit_identical_and_cap_wiring(spark):
+def test_pq_arrow_kernel_bit_identical_and_cap_wiring(spark):
     """The production PQ path encodes (and train-assigns) with the
     broadcast-codebook Arrow kernel instead of the kcent×-fan-out
     relational join (measured 236 s → seconds for the 200k-vector
@@ -592,7 +592,9 @@ def test_pq_arrow_encode_bit_identical_and_cap_wiring(spark):
 
     emb = load_table(spark, SF_DIR, "embeddings")
     lf = pq._long_with_sub(emb, pq.M_SUBS_PROD, pq.N_DIMS).localCheckpoint()
-    cents = pq.pq_codebooks(lf, pq.K_CENTS_PROD, pq.ITERS_PROD)
+    cents = pq.pq_codebooks(
+        lf, lambda c: pq._assign(lf, c), pq.K_CENTS_PROD, pq.ITERS_PROD
+    )
     rel = {
         (r["vid"], r["sub"]): r["cid"]
         for r in pq._assign(lf, cents).select("vid", "sub", "cid").collect()
@@ -713,38 +715,6 @@ def test_observation_metrics_piggyback_on_action(spark):
     n_purchases = observed.filter(F.col("event_type") == "purchase").count()
     assert obs.get["n"] == ev.count()
     assert obs.get["users"] > 0 and n_purchases > 0
-
-
-@pytest.mark.slow
-def test_star_cc_matches_simple_cc(spark):
-    """Large-star/small-star must compute the same components as
-    min-label propagation on every graph shape — and beat it on round
-    count for chains (log² n vs diameter)."""
-    from big_data_exercise_spark.dedup.cluster import (
-        connected_components,
-        connected_components_star,
-    )
-
-    cases = {
-        "chain": [(i, i + 1) for i in range(31)],
-        "cliques": [(a, b) for a in range(5) for b in range(a + 1, 5)]
-        + [(a, b) for a in range(5, 10) for b in range(a + 1, 10)],
-        "reversed": [(i + 1, i) for i in range(15)],
-    }
-    for name, edge_rows in cases.items():
-        n = max(max(e) for e in edge_rows) + 2  # +1 isolated node
-        nodes = spark.createDataFrame([(i,) for i in range(n)], "node long")
-        edges = spark.createDataFrame(edge_rows, "src long, dst long")
-        simple = {
-            tuple(r) for r in connected_components(nodes, edges, max_iter=64).collect()
-        }
-        st: dict = {}
-        star = {
-            tuple(r)
-            for r in connected_components_star(nodes, edges, stats=st).collect()
-        }
-        assert star == simple, name
-        assert st["rounds"] <= 8, (name, st)  # log-ish, never diameter
 
 
 def test_stratified_sample_by_is_seeded_and_proportional(spark):
@@ -1028,73 +998,43 @@ def test_chunking_covers_every_token_with_overlap(spark):
     assert rows[0]["chunk_fp"] != rows[1]["chunk_fp"]
 
 
-def test_kmeans_arrow_assign_bit_identical(spark):
-    """Round-11: the numpy assignment kernel (registry path) and the
-    relational broadcast-join form must emit identical (vec_id,
-    cluster, dist) triples — integer-exact, not approximately equal —
-    across the full Lloyd loop, so drift cannot compound through the
-    centroid updates."""
-    from big_data_exercise_spark.similarity.kmeans import kmeans_assignments
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    rel = {
-        tuple(r)
-        for r in kmeans_assignments(emb, k=8, iters=2, arrow_assign=False).collect()
-    }
-    arr = {
-        tuple(r)
-        for r in kmeans_assignments(emb, k=8, iters=2, arrow_assign=True).collect()
-    }
-    assert rel == arr and len(rel) > 0
-
-    # round-12 (advice item): RAGGED and NULL rows too — the kernel
-    # assigns a short vector via the partial-dim distance exactly like
-    # the relational join (the old kernel silently dropped it)
-    dirty = emb.limit(12).unionByName(
-        spark.createDataFrame(
-            [(90001, None, 0), (90002, [0.25] * 63, 0), (90003, [0.5] * 7, 0)],
-            emb.schema,
-        )
-    )
-    rel_d = {
-        tuple(r)
-        for r in kmeans_assignments(dirty, k=4, iters=2, arrow_assign=False).collect()
-    }
-    arr_d = {
-        tuple(r)
-        for r in kmeans_assignments(dirty, k=4, iters=2, arrow_assign=True).collect()
-    }
-    assert rel_d == arr_d and len(rel_d) > 0
-    ids = {t[0] for t in arr_d}
-    assert 90002 in ids and 90003 in ids and 90001 not in ids
-
-
 def test_kmeans_partitions_all_vectors_and_improves(spark):
+    """Every vector gets exactly one cluster and the Lloyd rounds never
+    raise the total cost — on the clean corpus and on a dirty one that
+    adds a NULL embedding, which drops (posexplode of NULL yields no
+    dims), and two ragged ones, which are assigned by the partial
+    distance over the dims they have."""
     from big_data_exercise_spark.similarity.kmeans import (
         _assign,
         kmeans_assignments,
         quantized_long,
     )
 
-    emb = load_table(spark, SF_DIR, "embeddings")
-    n = emb.count()
-    out = kmeans_assignments(emb, k=8, iters=2)
-    rows = out.collect()
-    # exactly one assignment per vector, clusters within [0, k)
-    assert len(rows) == n
-    assert {r["vec_id"] for r in rows} == {
-        r["vec_id"] for r in emb.select("vec_id").collect()
-    }
-    assert all(0 <= r["cluster"] < 8 for r in rows)
-    # Lloyd guarantee (exact in integer space up to floor-div rounding):
-    # refined centroids fit at least as well as the seed centroids
-    long_df = quantized_long(emb).localCheckpoint()
-    seeds = long_df.filter(F.col("vid") < 8).select(
-        F.col("vid").cast("int").alias("cid"), "dim", F.col("q").alias("qc")
+    clean = load_table(spark, SF_DIR, "embeddings")
+    dirty = clean.limit(12).unionByName(
+        spark.createDataFrame(
+            [(90001, None, 0), (90002, [0.25] * 63, 0), (90003, [0.5] * 7, 0)],
+            clean.schema,
+        )
     )
-    seed_cost = _assign(long_df, seeds).agg(F.sum("dist")).collect()[0][0]
-    final_cost = sum(r["dist"] for r in rows)
-    assert final_cost <= seed_cost
+    for emb in (clean, dirty):
+        expected = {r["vec_id"] for r in emb.select("vec_id").collect()} - {90001}
+        rows = kmeans_assignments(emb, k=8, iters=2).collect()
+        # exactly one assignment per vector, clusters within [0, k)
+        assert len(rows) == len(expected)
+        assert {r["vec_id"] for r in rows} == expected
+        assert all(0 <= r["cluster"] < 8 for r in rows)
+        # Lloyd guarantee (exact in integer space up to floor-div
+        # rounding): refined centroids fit at least as well as the
+        # seed centroids (the 8 smallest vids)
+        long_df = quantized_long(emb).localCheckpoint()
+        seeds = long_df.filter(F.col("vid").isin(sorted(expected)[:8])).select(
+            F.col("vid").cast("int").alias("cid"), "dim", F.col("q").alias("qc")
+        )
+        seed_cost = _assign(long_df, seeds).agg(F.sum("dist")).collect()[0][0]
+        final_cost = sum(r["dist"] for r in rows)
+        assert final_cost <= seed_cost
+    assert {90002, 90003} <= expected
 
 
 def test_pagerank_invariants(spark):
@@ -1953,7 +1893,7 @@ def test_connected_components_uf_gate_equivalence(spark, monkeypatch):
         assert cid <= node
 
 
-def test_pagerank_driver_gate_equivalence(spark):
+def test_pagerank_driver_replay_equivalence(spark, monkeypatch):
     """Round-11: the driver numpy power iteration (edge count under
     ``SPARK_GRAFT_DRIVER_PR_EDGES``) and the relational loop must emit
     identical rows — the arithmetic is all non-negative int64, so the
@@ -1965,16 +1905,14 @@ def test_pagerank_driver_gate_equivalence(spark):
     edges_py += [(2 * c, 2 * 5 + 1) for c in range(1, 6)]  # extra fan-in
     edges = spark.createDataFrame(edges_py, "u long, v long").distinct()
     fast = [tuple(r) for r in graph.pagerank(edges, iters=3, top=25).collect()]
-    slow = [
-        tuple(r)
-        for r in graph.pagerank(edges, iters=3, top=25, driver_gate=0).collect()
-    ]
+    monkeypatch.setattr(graph, "_DRIVER_PR_EDGES", 0)
+    slow = [tuple(r) for r in graph.pagerank(edges, iters=3, top=25).collect()]
     assert fast == slow
     ranks = [r[2] for r in fast]
     assert ranks == sorted(ranks, reverse=True)
 
 
-def test_pagerank_negative_ids_fall_back_to_relational(spark):
+def test_pagerank_negative_ids_fall_back_to_relational(spark, monkeypatch):
     """Round-12 (advice item): the driver numpy replay uses Python
     ``//``/``%`` where the relational loop uses Spark's truncating DIV
     and sign-preserving ``%`` — they diverge on NEGATIVE node ids, so
@@ -1986,10 +1924,8 @@ def test_pagerank_negative_ids_fall_back_to_relational(spark):
     edges_py = [(-2, 3), (-4, 3), (-2, 5), (6, 5)]
     edges = spark.createDataFrame(edges_py, "u long, v long")
     gated = [tuple(r) for r in graph.pagerank(edges, iters=2, top=10).collect()]
-    forced = [
-        tuple(r)
-        for r in graph.pagerank(edges, iters=2, top=10, driver_gate=0).collect()
-    ]
+    monkeypatch.setattr(graph, "_DRIVER_PR_EDGES", 0)
+    forced = [tuple(r) for r in graph.pagerank(edges, iters=2, top=10).collect()]
     assert gated == forced and len(gated) > 0
     # the divergent projection really is exercised: negative ids map
     # through Spark semantics (-2 % 2 == 0 → customer, -2 DIV 2 == -1)

@@ -1,11 +1,11 @@
 #!/usr/bin/env python
-"""Round-11 profiling harness: time declared queries through the noop
-sink (bench methodology: best-of-N, per-query cache isolation) and dump
-`.explain("formatted")` to plans/r12/<name>_<tag>.txt.
+"""Profiling harness: time registry queries through the noop sink
+(bench methodology: best-of-N, per-query cache isolation) and dump
+`.explain("formatted")` to <plans-dir>/<name>_<tag>.txt.
 
 Usage:
-    python tools/profile_r12.py --tag before q1 q2 ...
-    python tools/profile_r12.py --tag before --reps 3 --explain-only q1
+    python tools/query_profile.py --plans-dir plans/latest --tag before q1 q2 ...
+    python tools/query_profile.py --plans-dir plans/latest --reps 3 --explain-only q1
 
 Keeps the bench's conf (local[$SPARK_GRAFT_CPUS], shuffle=cpus,
 1 MB maxPartitionBytes) so walls here are comparable to bench walls.
@@ -28,6 +28,8 @@ from big_data_exercise_spark.session import get_spark
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="+")
+    ap.add_argument("--plans-dir", required=True,
+                    help="directory the formatted plans are written to")
     ap.add_argument("--tag", default="before")
     ap.add_argument("--reps", type=int, default=3)
     ap.add_argument("--explain-only", action="store_true")
@@ -37,12 +39,10 @@ def main() -> None:
     args = ap.parse_args()
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark("r12-profile", cpus=cpus, shuffle_partitions=cpus)
+    spark = get_spark("profile", cpus=cpus, shuffle_partitions=cpus)
     spark.conf.set("spark.sql.files.maxPartitionBytes", "1m")
     specs = all_queries()
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "plans", "r12")
-    os.makedirs(out_dir, exist_ok=True)
+    os.makedirs(args.plans_dir, exist_ok=True)
 
     results: dict[str, list[float]] = {}
     for name in args.names:
@@ -52,7 +52,7 @@ def main() -> None:
             plan = df._jdf.queryExecution().explainString(
                 spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                     "formatted"))
-            path = os.path.join(out_dir, f"{name}_{args.tag}.txt")
+            path = os.path.join(args.plans_dir, f"{name}_{args.tag}.txt")
             with open(path, "w") as f:
                 f.write(plan)
             print(f"# wrote {path}", file=sys.stderr)
@@ -62,7 +62,7 @@ def main() -> None:
         for _ in range(args.reps):
             t0 = time.perf_counter()
             df = spec.build(spark, args.sf_dir)
-            spark.sparkContext.setJobDescription(f"r12:{name}")
+            spark.sparkContext.setJobDescription(f"profile:{name}")
             df.write.format("noop").mode("overwrite").save()
             spark.sparkContext.setJobDescription(None)
             walls.append(round(time.perf_counter() - t0, 3))
