@@ -26,9 +26,9 @@ quasi-cliques), so diameters are tiny — 3-5 rounds in practice.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, functions as F
+
+from big_data_exercise_spark.session import env_int
 
 # Max node-label rows the contraction rewrite will force-broadcast.
 # The raw payload is ~16 B/row, but a broadcast materializes as a JVM
@@ -38,9 +38,7 @@ from pyspark.sql import DataFrame, functions as F
 # with smaller executors should lower it via the env knob; past the
 # threshold the rewrite degrades to a shuffle join (correct at any
 # scale, just not the local fast path).
-_BROADCAST_LABEL_ROWS = int(
-    os.environ.get("SPARK_GRAFT_BROADCAST_LABEL_ROWS", "5000000")
-)
+_BROADCAST_LABEL_ROWS = env_int("SPARK_GRAFT_BROADCAST_LABEL_ROWS", 5_000_000)
 
 # Max CONTRACTED edge rows solved with a driver-side union-find instead
 # of the iterative frontier loop (round 11). Rationale: after star
@@ -52,7 +50,7 @@ _BROADCAST_LABEL_ROWS = int(
 # the collect is the same driver transfer a broadcast build would do;
 # the union-find is O(E α(E)) on ≤ ~16 B/row metadata. Past the gate
 # the Pregel loop runs unchanged — correct at any scale.
-_DRIVER_UF_EDGES = int(os.environ.get("SPARK_GRAFT_DRIVER_UF_EDGES", "1000000"))
+_DRIVER_UF_EDGES = env_int("SPARK_GRAFT_DRIVER_UF_EDGES", 1_000_000)
 
 
 def _collect_edge_pairs(df: DataFrame):

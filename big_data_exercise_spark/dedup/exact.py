@@ -29,12 +29,6 @@ def dedup_exact(documents: DataFrame) -> DataFrame:
     )
 
 
-def duplicate_groups(documents: DataFrame) -> DataFrame:
-    """Fingerprint groups with more than one member — the audit view
-    (what would be removed, keyed by representative)."""
-    return dedup_exact(documents).filter(F.col("n_copies") > 1)
-
-
 def dedup_stats_by_lang(documents: DataFrame) -> DataFrame:
     """Per-language doc count vs distinct-fingerprint count — the
     dedup-rate dashboard aggregate."""

@@ -47,8 +47,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from big_data_exercise_spark.functions.numeric import round_det_nn
 from big_data_exercise_spark.functions.text import tokens
-
-import os
+from big_data_exercise_spark.session import env_int
 
 P = 8191
 # Max distinct-token-set rows the verify stage will force-broadcast
@@ -56,9 +55,7 @@ P = 8191
 # a few hundred MB resident at the cap, same sizing rationale as the
 # closure's SPARK_GRAFT_BROADCAST_LABEL_ROWS). Past it, the verify
 # joins run as the stats-blind shuffle plan — correct at any scale.
-_BROADCAST_SET_ROWS = int(
-    os.environ.get("SPARK_GRAFT_BROADCAST_SET_ROWS", "1000000")
-)
+_BROADCAST_SET_ROWS = env_int("SPARK_GRAFT_BROADCAST_SET_ROWS", 1_000_000)
 # Fixed universal-hash parameters (k=12). Public textbook construction:
 # h_j(x) = (A[j]*x + B[j]) mod P with odd A.
 A = (3, 5, 7, 11, 13, 17, 19, 23, 29, 31, 37, 41)
@@ -112,13 +109,6 @@ def _signatures_from_ids(tt: DataFrame, num_hashes: int = 12) -> DataFrame:
         for j in range(num_hashes)
     ]
     return tt.groupBy("doc_id").agg(*mins)
-
-
-def minhash_signatures(
-    documents: DataFrame, num_hashes: int = 12, use_vocab_ranks: bool = False
-) -> DataFrame:
-    """One row per doc: h0..h{k-1} MinHash signature columns."""
-    return _signatures_from_ids(doc_token_ids(documents, use_vocab_ranks), num_hashes)
 
 
 def lsh_candidate_pairs(

@@ -48,10 +48,6 @@ def distinct_token_count(col: Column) -> Column:
     return F.size(F.array_distinct(tokens(col)))
 
 
-def stopword_count(col: Column) -> Column:
-    return F.size(F.filter(tokens(col), lambda t: t.isin(*STOPWORDS)))
-
-
 # Unicode-version lower() skew (round-8 full-codepoint audit): the JVM
 # and DuckDB's utf8proc implement DIFFERENT Unicode versions, so 70
 # recently-encoded cased letters (Cyrillic U+1C89, Latin additions,

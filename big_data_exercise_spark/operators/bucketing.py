@@ -37,6 +37,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from big_data_exercise_spark.functions.numeric import exact_sum
+from big_data_exercise_spark.session import scratch_dir
 
 BUCKETS = 8
 
@@ -47,34 +48,20 @@ BUCKETS = 8
 # would return a name the new catalog can't resolve (round-6 review
 # finding).
 _WRITTEN: set[tuple[str, str, str, int]] = set()
-_CLEANUP_REGISTERED: set[str] = set()
 
 
 def _db_for(spark: SparkSession, sf_dir: str) -> str:
     """One metastore database per (process, sf_dir): the sf token keeps
     sf0.001 tests and sf0.01 driver runs sharing a session from reading
-    each other's buckets; the pid token keeps two CONCURRENT processes
-    sharing a warehouse dir (a bench and a test run) from clobbering
-    each other's ``mode(overwrite)`` table rewrites mid-query."""
-    import atexit
-    import shutil
-    from urllib.parse import unquote, urlparse
-
+    each other's buckets; the pid token keeps two processes sharing one
+    metastore apart. The database's LOCATION is run scratch, not the
+    warehouse, so its tables are removed with the run even when several
+    processes share a warehouse dir."""
     slug = re.sub(r"[^0-9a-zA-Z]+", "_", os.path.normpath(sf_dir)).strip("_").lower()
     db = f"bdes_buckets_p{os.getpid()}_{slug}"
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
-    # pid-scoped databases would otherwise accumulate one table copy
-    # per process in the shared warehouse dir; remove this process's
-    # physical dir at exit (the next process creates its own db, so a
-    # dangling catalog entry is never read). unquote: the URI form
-    # percent-encodes spaces; isabs: a relative warehouse would make
-    # the exit-time rmtree resolve against whatever cwd is then.
-    wh = unquote(urlparse(spark.conf.get("spark.sql.warehouse.dir")).path)
-    if wh and os.path.isabs(wh) and db not in _CLEANUP_REGISTERED:
-        _CLEANUP_REGISTERED.add(db)
-        atexit.register(
-            shutil.rmtree, os.path.join(wh, f"{db}.db"), ignore_errors=True
-        )
+    if not spark.catalog.databaseExists(db):
+        loc = scratch_dir("bdes_buckets_")
+        spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{loc}'")
     return db
 
 

@@ -106,14 +106,3 @@ def heavy_hitters(
         )
     )
     return hitters.unionByName(null_row).orderBy(key)
-
-
-def heavy_hitters_sql(key: str = "user_id", k: int = K_COUNTERS) -> str:
-    """DuckDB oracle: the naive full-cardinality plan — hash equality
-    against it is the exactness proof for the sketch-prefiltered plan."""
-    return f"""
-        SELECT {key}, CAST(COUNT(*) AS BIGINT) AS n_events
-        FROM events GROUP BY {key}
-        HAVING COUNT(*) * {k} > (SELECT COUNT(*) FROM events)
-        ORDER BY {key}
-    """

@@ -40,9 +40,9 @@ the gate changes the wall, never the output — pinned by
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, functions as F
+
+from big_data_exercise_spark.session import env_int
 
 SCALE = 10**12  # fixed-point: rank 1.0 ≙ SCALE
 
@@ -51,7 +51,7 @@ SCALE = 10**12  # fixed-point: rank 1.0 ≙ SCALE
 # _DRIVER_UF_EDGES: below it, iterating on the driver replaces
 # ~3 scheduler jobs per round; past it, the relational loop runs
 # unchanged (correct at any scale).
-_DRIVER_PR_EDGES = int(os.environ.get("SPARK_GRAFT_DRIVER_PR_EDGES", "1000000"))
+_DRIVER_PR_EDGES = env_int("SPARK_GRAFT_DRIVER_PR_EDGES", 1_000_000)
 
 
 def trade_edges(orders: DataFrame, lineitem: DataFrame) -> DataFrame:

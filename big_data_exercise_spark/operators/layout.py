@@ -119,12 +119,12 @@ def compact(spark, src_path: str, dst_path: str, target_files: int = 8):
 # count remains the dominant lever.
 
 import os as _os
-import re as _re
-import tempfile as _tempfile
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
+
+from big_data_exercise_spark.session import scratch_dir
 
 CODE_BITS = 16
 CLUSTER_FILES = 64
@@ -307,9 +307,8 @@ def _layout_for(
     events: DataFrame,
     bounds: tuple[float, float, float, float],
 ) -> str:
-    """pid-scoped, written-once-per-process layout dir (the bucketing
-    module's isolation discipline), removed at interpreter exit so
-    repeated runs don't accumulate dead-pid copies in the temp dir.
+    """Written-once-per-process layout dir under the run's scratch
+    root.
 
     Contract: ``events`` must be the FULL table for ``sf_dir`` — the
     memo is keyed on (sf_dir, bounds), so a same-bounds but
@@ -317,21 +316,10 @@ def _layout_for(
     The bounds key catches the common divergence (a filtered frame
     usually shifts min/max); the registry's only caller always passes
     the full table."""
-    import atexit
-    import shutil
-
-    slug = _re.sub(
-        r"[^0-9a-zA-Z]+", "_", _os.path.normpath(sf_dir)
-    ).strip("_").lower()
-    out = _os.path.join(
-        _tempfile.gettempdir(), f"bdes_zorder_p{_os.getpid()}_{slug}"
-    )
-    key = (out, bounds)
-    if key not in _WRITTEN:
-        write_zordered(events, out, bounds)
-        atexit.register(shutil.rmtree, out, ignore_errors=True)
-        _WRITTEN[key] = out
-    return out
+    key = (_os.path.abspath(sf_dir), bounds)
+    if not _os.path.isdir(_WRITTEN.get(key, "")):
+        _WRITTEN[key] = write_zordered(events, scratch_dir("bdes_zorder_"), bounds)
+    return _WRITTEN[key]
 
 
 def box_bounds(bounds: tuple[float, float, float, float]) -> tuple[float, ...]:

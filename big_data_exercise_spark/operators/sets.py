@@ -34,11 +34,6 @@ def all_user_type_pairs(events: DataFrame) -> DataFrame:
     return events.select("user_id", "event_type").dropDuplicates()
 
 
-def union_sources(a: DataFrame, b: DataFrame) -> DataFrame:
-    """unionByName — schema-aligned append of two relations."""
-    return a.unionByName(b)
-
-
 def union_click_purchase_stats(events: DataFrame) -> DataFrame:
     """unionByName with allowMissingColumns (SET-u): click rows carry
     ``value``, purchase rows don't — missing columns null-fill, the

@@ -24,13 +24,12 @@ SimHash, heuristic language-ID, streaming-internal plumbing) carry
 from __future__ import annotations
 
 import os
-import tempfile
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from big_data_exercise_spark.session import tune_session
+from big_data_exercise_spark.session import scratch_dir, tune_session
 from big_data_exercise_spark.tables import load_table, register_views
 from big_data_exercise_spark.operators import (
     aggregations as agg,
@@ -1145,7 +1144,7 @@ def _specs() -> list[QuerySpec]:
 
     def _partitioned_day(sp: SparkSession, d: str) -> DataFrame:
         ev = _t(sp, d, "events")
-        out = os.path.join(tempfile.mkdtemp(prefix="bdes_part_"), "events_by_day")
+        out = os.path.join(scratch_dir("bdes_part_"), "events_by_day")
         (
             ev.withColumn("day", F.to_date("ts"))
             .write.mode("overwrite")
@@ -1169,7 +1168,7 @@ def _specs() -> list[QuerySpec]:
         # 100 TB table depends on (per-file pruning still applies; the
         # merged read costs one extra footer pass at planning).
         ev = _t(sp, d, "events").select("event_id", "user_id", "event_type")
-        out = tempfile.mkdtemp(prefix="bdes_evo_")
+        out = scratch_dir("bdes_evo_")
         v1 = ev.filter(F.col("event_id") % 2 == 0).drop("event_type")
         v2 = ev.filter(F.col("event_id") % 2 == 1)
         v1.write.mode("overwrite").parquet(os.path.join(out, "v1"))
@@ -1353,7 +1352,7 @@ def _specs() -> list[QuerySpec]:
 
     def _compacted_rollup(sp: SparkSession, d: str) -> DataFrame:
         ev = _t(sp, d, "events")
-        base = tempfile.mkdtemp(prefix="bdes_compact_")
+        base = scratch_dir("bdes_compact_")
         frag, dst = os.path.join(base, "frag"), os.path.join(base, "compact")
         layout.fragment_write(ev.select("event_type", "value"), frag)
         compacted = layout.compact(sp, frag, dst)
@@ -2520,7 +2519,7 @@ def _specs() -> list[QuerySpec]:
     ))
     def _ivf_indexed(sp: SparkSession, d: str) -> DataFrame:
         emb = _t(sp, d, "embeddings")
-        index_dir = os.path.join(tempfile.mkdtemp(prefix="bdes_ivf_"), "index")
+        index_dir = os.path.join(scratch_dir("bdes_ivf_"), "index")
         knn.ivf_build(emb, index_dir)
         return knn.ivf_topk_indexed(emb, index_dir)
 
@@ -3565,7 +3564,7 @@ def _specs() -> list[QuerySpec]:
             .filter(F.col("value") > 150)
             .select("event_id", "user_id", "event_type", "value")
         )
-        db = os.path.join(tempfile.mkdtemp(prefix="bdes_derby_"), "db")
+        db = os.path.join(scratch_dir("bdes_derby_"), "db")
         url = jdbcio.derby_url(db)
         streams.run_foreach_batch_to_jdbc(filtered, url, "stream_sink")
         return jdbcio.read_jdbc(sp, url, "stream_sink")
@@ -3757,7 +3756,7 @@ def _specs() -> list[QuerySpec]:
         part = _t(sp, d, "part").select(
             "p_partkey", "p_name", "p_brand", "p_retailprice"
         )
-        out = tempfile.mkdtemp(prefix="bdes_csv_")
+        out = scratch_dir("bdes_csv_")
         return csvio.roundtrip(part, out).groupBy("p_brand").agg(
             F.count("*").alias("n_parts"),
             exact_sum(F.col("p_retailprice")).alias("total_retail"),
@@ -3777,7 +3776,7 @@ def _specs() -> list[QuerySpec]:
 
     def _orc_roundtrip(sp: SparkSession, d: str) -> DataFrame:
         ev = _t(sp, d, "events").select("event_id", "ts", "event_type", "value")
-        out = tempfile.mkdtemp(prefix="bdes_orc_")
+        out = scratch_dir("bdes_orc_")
         return orcio.roundtrip(ev, out).groupBy("event_type").agg(
             F.count("*").alias("n_events"),
             exact_sum(F.col("value")).alias("total_value"),
@@ -3800,7 +3799,7 @@ def _specs() -> list[QuerySpec]:
 
     def _text_log_parse(sp: SparkSession, d: str) -> DataFrame:
         ev = _t(sp, d, "events").select("event_id", "user_id", "event_type", "value")
-        out = tempfile.mkdtemp(prefix="bdes_text_")
+        out = scratch_dir("bdes_text_")
         return textio.roundtrip(ev, out).groupBy("event_type").agg(
             F.count("*").alias("n_events"),
             exact_sum(F.col("value")).alias("total_value"),
@@ -3875,7 +3874,7 @@ def _specs() -> list[QuerySpec]:
 
     def _jdbc_roundtrip(sp: SparkSession, d: str) -> DataFrame:
         cust = _t(sp, d, "customer").select("c_custkey", "c_mktsegment", "c_acctbal")
-        db = os.path.join(tempfile.mkdtemp(prefix="bdes_derby_"), "db")
+        db = os.path.join(scratch_dir("bdes_derby_"), "db")
         return jdbcio.roundtrip(cust, db, "customer_rt").groupBy("c_mktsegment").agg(
             F.count("*").alias("n_customers"),
             exact_sum(F.col("c_acctbal")).alias("total_acctbal"),

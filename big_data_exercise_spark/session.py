@@ -24,8 +24,12 @@ Scale notes (100 TB / 1000-executor target):
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
+import threading
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -48,8 +52,50 @@ RUNTIME_CONF: dict[str, str] = {
 }
 
 
+def env_int(name: str, default: int | None) -> int | None:
+    """Integer env knob: unset returns ``default``; a malformed value
+    warns and returns ``default`` instead of raising (several knobs are
+    read at import, where a ValueError would break the package import)."""
+    raw = os.environ.get(name)
+    if raw is None:
+        return default
+    try:
+        return int(raw)
+    except ValueError:
+        warnings.warn(f"{name}={raw!r} is not an integer; using {default!r}")
+        return default
+
+
+# The run's scratch root: one directory per process under the temp dir,
+# created on first use and removed by the exit handler below.
+_SCRATCH: dict = {"root": "", "pid": None}
+_SCRATCH_LOCK = threading.Lock()
+
+
+@atexit.register
+def _remove_scratch_root() -> None:
+    # A forked child inherits this handler; only the creating process
+    # may remove the root, or a child's exit would delete live scratch.
+    if _SCRATCH["pid"] == os.getpid():
+        shutil.rmtree(_SCRATCH["root"], ignore_errors=True)
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh directory for run-scoped scratch (checkpoints, round-trip
+    files, layout copies, embedded databases). Every one lives under the
+    process's scratch root, which is removed at interpreter exit; a root
+    that has disappeared, or one inherited across a fork, is replaced by
+    a new one on the next call."""
+    with _SCRATCH_LOCK:
+        root = _SCRATCH["root"]
+        if _SCRATCH["pid"] != os.getpid() or not os.path.isdir(root):
+            root = tempfile.mkdtemp(prefix="bdes_run_")
+            _SCRATCH.update(root=root, pid=os.getpid())
+    return tempfile.mkdtemp(prefix=prefix, dir=root)
+
+
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8)))
+    return env_int("SPARK_GRAFT_CPUS", os.cpu_count() or 8)
 
 
 def _pin_pythonpath() -> None:
@@ -131,9 +177,8 @@ def bound_reader_batch(spark: SparkSession, sf_dir: str) -> int:
         spark.conf.set(READER_BATCH_KEY, str(READER_BATCH_DEFAULT))
         return READER_BATCH_DEFAULT
 
-    env = os.environ.get("SPARK_GRAFT_READER_BATCH")
-    if env is not None:
-        rows = int(env)
+    rows = env_int("SPARK_GRAFT_READER_BATCH", None)
+    if rows is not None:
         if rows > 0:
             spark.conf.set(READER_BATCH_KEY, str(rows))
             return rows
@@ -190,13 +235,11 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
-        # Static conf: saveAsTable targets (bucketed tables) land in a
-        # scratch warehouse, never in the repo working directory.
+        # Static conf: the warehouse is a deployment path; by default
+        # it is run scratch, never the repo working directory.
         .config(
             "spark.sql.warehouse.dir",
-            os.environ.get(
-                "SPARK_GRAFT_WAREHOUSE", tempfile.mkdtemp(prefix="bdes_wh_")
-            ),
+            os.environ.get("SPARK_GRAFT_WAREHOUSE") or scratch_dir("bdes_wh_"),
         )
     )
     for k, v in RUNTIME_CONF.items():

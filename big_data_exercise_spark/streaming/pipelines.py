@@ -24,13 +24,15 @@ semantics).
 from __future__ import annotations
 
 import os
-import tempfile
+import shutil
 import time
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from big_data_exercise_spark.functions.numeric import exact_sum
+from big_data_exercise_spark.session import env_int, scratch_dir
 from big_data_exercise_spark.tables import normalize_table, raw_schema
 
 # Per-batch trigger walls (ms) of the most recent completed
@@ -64,9 +66,9 @@ def _multi_file_feed(spark: SparkSession, sf_dir: str, n_files: int) -> str:
     hit (pinned end-to-end by tests/test_streaming_multibatch.py).
     """
     key = (os.path.abspath(sf_dir), n_files)
-    if key in _FEED_CACHE:
+    if os.path.isdir(_FEED_CACHE.get(key, "")):
         return _FEED_CACHE[key]
-    out = tempfile.mkdtemp(prefix="bdes_feed_")
+    out = scratch_dir("bdes_feed_")
     raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
     (
         raw.repartitionByRange(n_files, "ts")
@@ -96,7 +98,7 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps the original single-file read; the final results are
     identical either way (multi-batch equivalence test)."""
     schema = raw_schema(spark, sf_dir, "events")
-    n_feed = int(os.environ.get("SPARK_GRAFT_STREAM_FEED_FILES", "1"))
+    n_feed = env_int("SPARK_GRAFT_STREAM_FEED_FILES", 1)
     if n_feed > 1:
         feed = _multi_file_feed(spark, sf_dir, n_feed)
         _note_source_bytes(feed)  # state-partition autotune hint
@@ -564,6 +566,25 @@ def _state_store_instances(spark: SparkSession) -> int:
     return max(2, min(width, -(-nbytes // _STATE_BYTES_PER_INSTANCE)))
 
 
+@contextmanager
+def _started(result: DataFrame, writer):
+    """Start ``writer`` (a configured ``result.writeStream``) under a
+    fresh scratch checkpoint with right-sized state partitioning; yield
+    the running query, then stop it and remove the checkpoint. The
+    checkpoint lives only for this one run: no runner returns it, so
+    nothing could restart from it."""
+    ckpt = scratch_dir("bdes_ckpt_")
+    try:
+        with _sized_state_store(result.sparkSession):
+            q = writer.option("checkpointLocation", ckpt).start()
+        try:
+            yield q
+        finally:
+            q.stop()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+
+
 def run_to_memory(result: DataFrame, output_mode: str = "complete") -> DataFrame:
     """Execute a streaming plan to completion (availableNow semantics
     via processAllAvailable) into a memory sink; return the final
@@ -576,7 +597,6 @@ def run_to_memory(result: DataFrame, output_mode: str = "complete") -> DataFrame
     ``output_mode="append"``.
     """
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    ckpt = tempfile.mkdtemp(prefix="bdes_ckpt_")
     spark = result.sparkSession
     # recentProgress keeps only the LAST numRecentProgressUpdates
     # entries (default 100): a >100-batch run would otherwise publish
@@ -585,24 +605,16 @@ def run_to_memory(result: DataFrame, output_mode: str = "complete") -> DataFrame
     prog_key = "spark.sql.streaming.numRecentProgressUpdates"
     saved_prog = spark.conf.get(prog_key, None)
     spark.conf.set(prog_key, "100000")
-    with _sized_state_store(spark):
-        q = (
-            result.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
+    writer = result.writeStream.format("memory").queryName(name).outputMode(output_mode)
     try:
-        q.processAllAvailable()
-        LAST_BATCH_MS[:] = [
-            float(p.batchDuration)
-            for p in (q.recentProgress or [])
-            if p.numInputRows > 0
-        ]
+        with _started(result, writer) as q:
+            q.processAllAvailable()
+            LAST_BATCH_MS[:] = [
+                float(p.batchDuration)
+                for p in (q.recentProgress or [])
+                if p.numInputRows > 0
+            ]
     finally:
-        q.stop()
-        q.awaitTermination()
         if saved_prog is None:
             spark.conf.unset(prog_key)
         else:
@@ -617,13 +629,12 @@ def run_foreach_batch_to_jdbc(
     """foreachBatch → JDBC append: exactly the reference's sink
     (consumer_postgres_streaming.py:403-450 — each micro-batch appended
     to a Postgres table). Tested against embedded Derby; in production
-    only the url/driver change. Batches append under a durable
-    checkpoint → at-least-once into the table (the reference wiped
-    checkpoints per Airflow cycle and had the same semantics without
-    the durability)."""
+    only the url/driver change. Delivery within a call is
+    at-least-once. The checkpoint lives only for the call and is
+    removed when it ends, so a second call re-reads the whole source —
+    as the reference does after its Airflow cycle wipes its
+    checkpoints."""
     from big_data_exercise_spark.sources import jdbcio
-
-    ckpt = tempfile.mkdtemp(prefix="bdes_ckpt_")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():  # A8 probe, not a count (cheap on big batches)
@@ -632,15 +643,13 @@ def run_foreach_batch_to_jdbc(
             batch_df, url, table, driver=driver or jdbcio.DERBY_DRIVER
         )
 
-    with _sized_state_store(result.sparkSession):
-        q = (
-            result.writeStream.foreachBatch(write_batch)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination()
+    writer = (
+        result.writeStream.foreachBatch(write_batch)
+        .outputMode("append")
+        .trigger(availableNow=True)
+    )
+    with _started(result, writer) as q:
+        q.awaitTermination()
 
 
 def kafka_stream(
@@ -675,16 +684,15 @@ def kafka_stream(
 def kafka_sink(result: DataFrame, bootstrap_servers: str, topic: str, *cols: str):
     """Production Kafka sink (S4): to_json(struct(*)) value payload —
     the producer.py:40 serializer as a streaming writer. Returns the
-    started query."""
+    started query; its checkpoint is run scratch, removed at exit."""
     payload = result.select(
         F.to_json(F.struct(*[F.col(c) for c in cols])).alias("value")
     )
-    ckpt = tempfile.mkdtemp(prefix="bdes_ckpt_")
     return (
         payload.writeStream.format("kafka")
         .option("kafka.bootstrap.servers", bootstrap_servers)
         .option("topic", topic)
-        .option("checkpointLocation", ckpt)
+        .option("checkpointLocation", scratch_dir("bdes_ckpt_"))
         .start()
     )
 
@@ -714,12 +722,11 @@ def run_foreach_batch_to_parquet(
 ) -> str:
     """foreachBatch append sink (S5/S6 analog): each micro-batch is
     appended to a parquet table — the JDBC-append pattern of the
-    reference (consumer_postgres_streaming.py:427-440) with a durable
-    checkpoint (we keep checkpoints; the reference wiped them per
-    Airflow cycle, making delivery at-least-once — SURVEY.md §2.10).
-    Returns the output directory."""
-    out = out_dir or tempfile.mkdtemp(prefix="bdes_sink_")
-    ckpt = tempfile.mkdtemp(prefix="bdes_ckpt_")
+    reference (consumer_postgres_streaming.py:427-440). Delivery within
+    a call is at-least-once. The checkpoint lives only for the call and
+    is removed when it ends, as the reference's Airflow cycle wipes its
+    checkpoints (SURVEY.md §2.10). Returns the output directory."""
+    out = out_dir or scratch_dir("bdes_sink_")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         # Idempotent-append improvement over the reference: tag rows
@@ -728,13 +735,11 @@ def run_foreach_batch_to_parquet(
             "append"
         ).parquet(out)
 
-    with _sized_state_store(result.sparkSession):
-        q = (
-            result.writeStream.foreachBatch(write_batch)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination()
+    writer = (
+        result.writeStream.foreachBatch(write_batch)
+        .outputMode("append")
+        .trigger(availableNow=True)
+    )
+    with _started(result, writer) as q:
+        q.awaitTermination()
     return out

@@ -175,8 +175,7 @@ def _vhash(pdf) -> str:
     ).hexdigest()
 
 
-def _write_corpus(rows) -> str:
-    d = tempfile.mkdtemp(prefix="bdes_fuzz_")
+def _write_corpus(rows, d: str) -> None:
     tbl = pa.table(
         {
             "doc_id": pa.array([r[0] for r in rows], pa.int64()),
@@ -187,7 +186,6 @@ def _write_corpus(rows) -> str:
         }
     )
     pq.write_table(tbl, os.path.join(d, "documents.parquet"))
-    return d
 
 
 def _norm(pdf):
@@ -220,11 +218,12 @@ def test_oracle_pair_random_corpus(spark, name):
     @_fuzz_settings(5)
     @given(rows=st.lists(_DOC, min_size=0, max_size=10, unique_by=lambda r: r[0]))
     def run(rows):
-        sf_dir = _write_corpus(rows)
-        _compare(
-            spark, name, sf_dir, "documents",
-            os.path.join(sf_dir, "documents.parquet"), rows,
-        )
+        with tempfile.TemporaryDirectory() as sf_dir:
+            _write_corpus(rows, sf_dir)
+            _compare(
+                spark, name, sf_dir, "documents",
+                os.path.join(sf_dir, "documents.parquet"), rows,
+            )
 
     run()
 
@@ -234,11 +233,12 @@ def test_dedup_tier_oracle_pair_random_corpus(spark, name):
     @_fuzz_settings(2)
     @given(rows=st.lists(_DOC, min_size=0, max_size=8, unique_by=lambda r: r[0]))
     def run(rows):
-        sf_dir = _write_corpus(rows)
-        _compare(
-            spark, name, sf_dir, "documents",
-            os.path.join(sf_dir, "documents.parquet"), rows,
-        )
+        with tempfile.TemporaryDirectory() as sf_dir:
+            _write_corpus(rows, sf_dir)
+            _compare(
+                spark, name, sf_dir, "documents",
+                os.path.join(sf_dir, "documents.parquet"), rows,
+            )
 
     run()
 
@@ -364,8 +364,7 @@ _EVENT = st.tuples(
 )
 
 
-def _write_events(rows) -> str:
-    d = tempfile.mkdtemp(prefix="bdes_fuzz_ev_")
+def _write_events(rows, d: str) -> None:
     tbl = pa.table(
         {
             "event_id": pa.array([r[0] for r in rows], pa.int64()),
@@ -377,7 +376,6 @@ def _write_events(rows) -> str:
         }
     )
     pq.write_table(tbl, os.path.join(d, "events.parquet"))
-    return d
 
 
 @pytest.mark.parametrize("name", EVENTS_FUZZED)
@@ -387,11 +385,12 @@ def test_events_oracle_pair_random_corpus(spark, name):
         rows=st.lists(_EVENT, min_size=0, max_size=14, unique_by=lambda r: r[0])
     )
     def run(rows):
-        sf_dir = _write_events(rows)
-        _compare(
-            spark, name, sf_dir, "events",
-            os.path.join(sf_dir, "events.parquet"), rows,
-        )
+        with tempfile.TemporaryDirectory() as sf_dir:
+            _write_events(rows, sf_dir)
+            _compare(
+                spark, name, sf_dir, "events",
+                os.path.join(sf_dir, "events.parquet"), rows,
+            )
 
     run()
 
@@ -456,14 +455,12 @@ _ORDER = st.tuples(
 )
 
 
-def _write_table(name, cols, rows) -> str:
-    d = tempfile.mkdtemp(prefix=f"bdes_fuzz_{name}_")
+def _write_table(name, cols, rows, d: str) -> None:
     arrays = {}
     for i, (col, typ) in enumerate(cols):
         vals = [r[i] for r in rows]
         arrays[col] = pa.array(vals, typ)
     pq.write_table(pa.table(arrays), os.path.join(d, f"{name}.parquet"))
-    return d
 
 
 _LI_COLS = [
@@ -487,11 +484,12 @@ def test_lineitem_oracle_pair_random_corpus(spark, name):
     @_fuzz_settings(4)
     @given(rows=st.lists(_LINEITEM, min_size=0, max_size=14))
     def run(rows):
-        sf_dir = _write_table("lineitem", _LI_COLS, rows)
-        _compare(
-            spark, name, sf_dir, "lineitem",
-            os.path.join(sf_dir, "lineitem.parquet"), rows,
-        )
+        with tempfile.TemporaryDirectory() as sf_dir:
+            _write_table("lineitem", _LI_COLS, rows, sf_dir)
+            _compare(
+                spark, name, sf_dir, "lineitem",
+                os.path.join(sf_dir, "lineitem.parquet"), rows,
+            )
 
     run()
 
@@ -503,11 +501,12 @@ def test_orders_oracle_pair_random_corpus(spark, name):
         rows=st.lists(_ORDER, min_size=0, max_size=14, unique_by=lambda r: r[0])
     )
     def run(rows):
-        sf_dir = _write_table("orders", _ORD_COLS, rows)
-        _compare(
-            spark, name, sf_dir, "orders",
-            os.path.join(sf_dir, "orders.parquet"), rows,
-        )
+        with tempfile.TemporaryDirectory() as sf_dir:
+            _write_table("orders", _ORD_COLS, rows, sf_dir)
+            _compare(
+                spark, name, sf_dir, "orders",
+                os.path.join(sf_dir, "orders.parquet"), rows,
+            )
 
     run()
 
@@ -637,51 +636,51 @@ def test_join_oracle_pair_random_corpus(spark, name):
         ),
     )
     def run(orders, lineitem, customer, events):
-        sf_dir = tempfile.mkdtemp(prefix="bdes_fuzz_join_")
-        for tname, cols, rows in (
-            ("orders", _ORD_COLS, orders),
-            ("lineitem", _LI_COLS, lineitem),
-            ("customer", _CUST_COLS, customer),
-        ):
-            pq.write_table(
-                pa.table(
-                    {c: pa.array([r[i] for r in rows], t)
-                     for i, (c, t) in enumerate(cols)}
-                ),
-                os.path.join(sf_dir, f"{tname}.parquet"),
+        with tempfile.TemporaryDirectory() as sf_dir:
+            for tname, cols, rows in (
+                ("orders", _ORD_COLS, orders),
+                ("lineitem", _LI_COLS, lineitem),
+                ("customer", _CUST_COLS, customer),
+            ):
+                pq.write_table(
+                    pa.table(
+                        {c: pa.array([r[i] for r in rows], t)
+                         for i, (c, t) in enumerate(cols)}
+                    ),
+                    os.path.join(sf_dir, f"{tname}.parquet"),
+                )
+            ev_tbl = pa.table(
+                {
+                    "event_id": pa.array([r[0] for r in events], pa.int64()),
+                    "ts": pa.array([r[1] for r in events], pa.timestamp("us")),
+                    "user_id": pa.array([r[2] for r in events], pa.int64()),
+                    "event_type": pa.array([r[3] for r in events], pa.string()),
+                    "value": pa.array([r[4] for r in events], pa.float64()),
+                    "props": pa.array([r[5] for r in events], pa.string()),
+                }
             )
-        ev_tbl = pa.table(
-            {
-                "event_id": pa.array([r[0] for r in events], pa.int64()),
-                "ts": pa.array([r[1] for r in events], pa.timestamp("us")),
-                "user_id": pa.array([r[2] for r in events], pa.int64()),
-                "event_type": pa.array([r[3] for r in events], pa.string()),
-                "value": pa.array([r[4] for r in events], pa.float64()),
-                "props": pa.array([r[5] for r in events], pa.string()),
-            }
-        )
-        pq.write_table(ev_tbl, os.path.join(sf_dir, "events.parquet"))
+            pq.write_table(ev_tbl, os.path.join(sf_dir, "events.parquet"))
 
-        spec = SPECS[name]
-        got = _norm(spec.build(spark, sf_dir).toPandas())
-        con = duckdb.connect()
-        for t in ("orders", "lineitem", "customer", "events"):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM "
-                f"'{os.path.join(sf_dir, t + '.parquet')}'"
-            )
-        want = _norm(con.sql(spec.oracle).df())
-        con.close()
-        ctx = {"orders": orders, "lineitem": lineitem,
-               "customer": customer, "events": events}
-        assert sorted(got.columns) == sorted(want.columns), name
-        assert len(got) == len(want), (name, len(got), len(want), ctx)
-        assert _vhash(got) == _vhash(want), f"{name} diverged on {ctx}"
+            spec = SPECS[name]
+            got = _norm(spec.build(spark, sf_dir).toPandas())
+            con = duckdb.connect()
+            for t in ("orders", "lineitem", "customer", "events"):
+                con.execute(
+                    f"CREATE VIEW {t} AS SELECT * FROM "
+                    f"'{os.path.join(sf_dir, t + '.parquet')}'"
+                )
+            want = _norm(con.sql(spec.oracle).df())
+            con.close()
+            ctx = {"orders": orders, "lineitem": lineitem,
+                   "customer": customer, "events": events}
+            assert sorted(got.columns) == sorted(want.columns), name
+            assert len(got) == len(want), (name, len(got), len(want), ctx)
+            assert _vhash(got) == _vhash(want), f"{name} diverged on {ctx}"
 
     run()
 
 
-def test_ri_audit_null_pk_empty_child_corner(spark):
+def test_ri_audit_null_pk_empty_child_corner(spark, tmp_path):
     """Directed pin of the referential_integrity_audit childless-check
     NULL guard (round-8 advice item): a NULL o_orderkey order over an
     EMPTY lineitem. Without the symmetric IS NOT NULL on both sides
@@ -691,7 +690,7 @@ def test_ri_audit_null_pk_empty_child_corner(spark):
     childless while a NULL-filtered Spark side drops it. The fuzz
     generator can't reach this (o_orderkey is its unique_by key,
     drawn non-NULL), hence the directed lane."""
-    sf_dir = tempfile.mkdtemp(prefix="bdes_ri_corner_")
+    sf_dir = str(tmp_path)
     orders = [
         (None, 1, "F", 10.0, None, "2-HIGH"),
         (7, None, "O", 20.0, None, "1-URGENT"),
@@ -734,11 +733,12 @@ def test_embeddings_oracle_pair_random_corpus(spark, name):
         rows=st.lists(_EMB, min_size=0, max_size=10, unique_by=lambda r: r[0])
     )
     def run(rows):
-        sf_dir = _write_table("embeddings", _EMB_COLS, rows)
-        _compare(
-            spark, name, sf_dir, "embeddings",
-            os.path.join(sf_dir, "embeddings.parquet"), rows,
-        )
+        with tempfile.TemporaryDirectory() as sf_dir:
+            _write_table("embeddings", _EMB_COLS, rows, sf_dir)
+            _compare(
+                spark, name, sf_dir, "embeddings",
+                os.path.join(sf_dir, "embeddings.parquet"), rows,
+            )
 
     run()
 
@@ -783,11 +783,12 @@ def test_iterative_embeddings_oracle_pair_random_corpus(spark, name):
         )
     )
     def run(rows):
-        sf_dir = _write_table("embeddings", _EMB_COLS, rows)
-        _compare(
-            spark, name, sf_dir, "embeddings",
-            os.path.join(sf_dir, "embeddings.parquet"), rows,
-        )
+        with tempfile.TemporaryDirectory() as sf_dir:
+            _write_table("embeddings", _EMB_COLS, rows, sf_dir)
+            _compare(
+                spark, name, sf_dir, "embeddings",
+                os.path.join(sf_dir, "embeddings.parquet"), rows,
+            )
 
     run()
 
@@ -808,11 +809,12 @@ def test_cosine_oracle_dirty_vectors(spark):
         )
     )
     def run(rows):
-        sf_dir = _write_table("embeddings", _EMB_COLS, rows)
-        _compare(
-            spark, "knn_cosine_topk", sf_dir, "embeddings",
-            os.path.join(sf_dir, "embeddings.parquet"), rows,
-        )
+        with tempfile.TemporaryDirectory() as sf_dir:
+            _write_table("embeddings", _EMB_COLS, rows, sf_dir)
+            _compare(
+                spark, "knn_cosine_topk", sf_dir, "embeddings",
+                os.path.join(sf_dir, "embeddings.parquet"), rows,
+            )
 
     run()
 
@@ -937,56 +939,56 @@ def test_tpch_oracle_pair_random_corpus(spark, name):
              "lineitem"),
             (region, nation, supplier, part, customer, orders, lineitem),
         ))
-        sf_dir = tempfile.mkdtemp(prefix="bdes_fuzz_tpch_")
-        for tname, cols in _TPCH_TABLES:
-            rows = tables[tname]
+        with tempfile.TemporaryDirectory() as sf_dir:
+            for tname, cols in _TPCH_TABLES:
+                rows = tables[tname]
+                pq.write_table(
+                    pa.table(
+                        {c: pa.array([r[i] for r in rows], t)
+                         for i, (c, t) in enumerate(cols)}
+                    ),
+                    os.path.join(sf_dir, f"{tname}.parquet"),
+                )
             pq.write_table(
                 pa.table(
-                    {c: pa.array([r[i] for r in rows], t)
-                     for i, (c, t) in enumerate(cols)}
+                    {
+                        "event_id": pa.array([r[0] for r in events], pa.int64()),
+                        "ts": pa.array([r[1] for r in events], pa.timestamp("us")),
+                        "user_id": pa.array([r[2] for r in events], pa.int64()),
+                        "event_type": pa.array(
+                            [r[3] for r in events], pa.string()
+                        ),
+                        "value": pa.array([r[4] for r in events], pa.float64()),
+                        "props": pa.array([r[5] for r in events], pa.string()),
+                    }
                 ),
-                os.path.join(sf_dir, f"{tname}.parquet"),
+                os.path.join(sf_dir, "events.parquet"),
             )
-        pq.write_table(
-            pa.table(
-                {
-                    "event_id": pa.array([r[0] for r in events], pa.int64()),
-                    "ts": pa.array([r[1] for r in events], pa.timestamp("us")),
-                    "user_id": pa.array([r[2] for r in events], pa.int64()),
-                    "event_type": pa.array(
-                        [r[3] for r in events], pa.string()
-                    ),
-                    "value": pa.array([r[4] for r in events], pa.float64()),
-                    "props": pa.array([r[5] for r in events], pa.string()),
-                }
-            ),
-            os.path.join(sf_dir, "events.parquet"),
-        )
 
-        spec = SPECS[name]
-        got = _norm(spec.build(spark, sf_dir).toPandas())
-        con = duckdb.connect()
-        for t, _ in _TPCH_TABLES:
+            spec = SPECS[name]
+            got = _norm(spec.build(spark, sf_dir).toPandas())
+            con = duckdb.connect()
+            for t, _ in _TPCH_TABLES:
+                con.execute(
+                    f"CREATE VIEW {t} AS SELECT * FROM "
+                    f"'{os.path.join(sf_dir, t + '.parquet')}'"
+                )
             con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM "
-                f"'{os.path.join(sf_dir, t + '.parquet')}'"
+                "CREATE VIEW events AS SELECT * FROM "
+                f"'{os.path.join(sf_dir, 'events.parquet')}'"
             )
-        con.execute(
-            "CREATE VIEW events AS SELECT * FROM "
-            f"'{os.path.join(sf_dir, 'events.parquet')}'"
-        )
-        want = _norm(con.sql(spec.oracle).df())
-        con.close()
-        ctx = {k: v for k, v in tables.items()}
-        ctx["events"] = events
-        assert sorted(got.columns) == sorted(want.columns), name
-        assert len(got) == len(want), (name, len(got), len(want), ctx)
-        assert _vhash(got) == _vhash(want), f"{name} diverged on {ctx}"
+            want = _norm(con.sql(spec.oracle).df())
+            con.close()
+            ctx = {k: v for k, v in tables.items()}
+            ctx["events"] = events
+            assert sorted(got.columns) == sorted(want.columns), name
+            assert len(got) == len(want), (name, len(got), len(want), ctx)
+            assert _vhash(got) == _vhash(want), f"{name} diverged on {ctx}"
 
     run()
 
 
-def test_casefold_skew_chars_fingerprint_parity(spark):
+def test_casefold_skew_chars_fingerprint_parity(spark, tmp_path):
     """Directed: every codepoint in the casefold tables (SpecialCasing
     trio + the 70 Unicode-version-skew letters the round-8
     full-codepoint audit found — JVM lowers them, DuckDB's utf8proc
@@ -999,7 +1001,8 @@ def test_casefold_skew_chars_fingerprint_parity(spark):
         (i, f"x {ch}y", "src0", "en", 3)
         for i, ch in enumerate(CASEFOLD_SRC)
     ]
-    sf_dir = _write_corpus(rows)
+    sf_dir = str(tmp_path)
+    _write_corpus(rows, sf_dir)
     for name in ("token_counts", "dedup_exact", "dedup_stats_by_lang"):
         _compare(
             spark, name, sf_dir, "documents",

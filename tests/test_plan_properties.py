@@ -405,14 +405,11 @@ def test_bucketed_point_lookup_prunes_buckets(spark):
     assert "SelectedBucketsCount: 1 out of 8" in plan
 
 
-def test_jdbc_scan_pushes_predicate_to_database(spark):
+def test_jdbc_scan_pushes_predicate_to_database(spark, tmp_path):
     """A filter over a JDBC scan must reach the database as SQL
     (PushedFilters on the JDBCRelation scan node), not run Spark-side
     over a full-table pull — at scale the difference is shipping the
     WHERE clause vs shipping the table."""
-    import tempfile
-    import os
-
     from pyspark.sql import functions as F
     from big_data_exercise_spark.sources import jdbcio
     from big_data_exercise_spark.tables import load_table
@@ -420,7 +417,7 @@ def test_jdbc_scan_pushes_predicate_to_database(spark):
     cust = load_table(spark, SF_DIR, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
-    db = os.path.join(tempfile.mkdtemp(prefix="bdes_derby_plan_"), "db")
+    db = str(tmp_path / "db")
     url = jdbcio.derby_url(db)
     jdbcio.write_jdbc(cust, url, "cust_push", mode="overwrite")
     scan = jdbcio.read_jdbc(spark, url, "cust_push").filter(

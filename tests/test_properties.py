@@ -1499,19 +1499,17 @@ def test_heavy_hitters_exact_with_null_keys(spark):
     assert {r["k"] for r in got2} == {0, 1, 2}
 
 
-def test_compaction_reduces_file_count_without_changing_data(spark):
+def test_compaction_reduces_file_count_without_changing_data(spark, tmp_path):
     """The compaction pass must (a) actually shrink the file count to
     the target, (b) do it shuffle-free (coalesce), (c) preserve every
     row — the three contracts of an OPTIMIZE rewrite."""
     import glob
     import os
-    import tempfile
 
     from big_data_exercise_spark.operators import layout
 
     ev = load_table(spark, SF_DIR, "events").select("event_id", "value")
-    base = tempfile.mkdtemp(prefix="bdes_compact_test_")
-    frag, dst = os.path.join(base, "frag"), os.path.join(base, "dst")
+    frag, dst = str(tmp_path / "frag"), str(tmp_path / "dst")
     layout.fragment_write(ev, frag, n_files=60)
     n_frag = len(glob.glob(os.path.join(frag, "*.parquet")))
     assert n_frag == 60

@@ -12,7 +12,6 @@ override.
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -27,8 +26,8 @@ from big_data_exercise_spark.session import (
 from .conftest import SF_DIR
 
 
-def _giant_dir(max_chars: int) -> str:
-    d = tempfile.mkdtemp(prefix="bdes_giant_docs_")
+def _giant_dir(tmp_path, max_chars: int) -> str:
+    d = str(tmp_path)
     tbl = pa.table(
         {
             "doc_id": pa.array([1, 2], pa.int64()),
@@ -50,9 +49,9 @@ def test_uniform_corpus_keeps_default(spark):
     assert spark.conf.get(READER_BATCH_KEY) == str(READER_BATCH_DEFAULT)
 
 
-def test_giant_corpus_bounds_batch(spark):
+def test_giant_corpus_bounds_batch(spark, tmp_path):
     spark.conf.set(READER_BATCH_KEY, str(READER_BATCH_DEFAULT))
-    d = _giant_dir(10_000_000)
+    d = _giant_dir(tmp_path, 10_000_000)
     rows = bound_reader_batch(spark, d)
     assert rows < READER_BATCH_DEFAULT
     # the bound honors the byte budget with the 2x multibyte factor
@@ -61,11 +60,11 @@ def test_giant_corpus_bounds_batch(spark):
     spark.conf.set(READER_BATCH_KEY, str(READER_BATCH_DEFAULT))
 
 
-def test_load_table_engages_bound(spark):
+def test_load_table_engages_bound(spark, tmp_path):
     from big_data_exercise_spark.tables import load_table
 
     spark.conf.set(READER_BATCH_KEY, str(READER_BATCH_DEFAULT))
-    d = _giant_dir(10_000_000)
+    d = _giant_dir(tmp_path, 10_000_000)
     df = load_table(spark, d, "documents")
     assert int(spark.conf.get(READER_BATCH_KEY)) < READER_BATCH_DEFAULT
     # the bounded read still returns every row
@@ -73,9 +72,9 @@ def test_load_table_engages_bound(spark):
     spark.conf.set(READER_BATCH_KEY, str(READER_BATCH_DEFAULT))
 
 
-def test_env_override(spark, monkeypatch):
+def test_env_override(spark, monkeypatch, tmp_path):
     spark.conf.set(READER_BATCH_KEY, str(READER_BATCH_DEFAULT))
-    d = _giant_dir(10_000_000)
+    d = _giant_dir(tmp_path, 10_000_000)
     monkeypatch.setenv("SPARK_GRAFT_READER_BATCH", "0")
     assert bound_reader_batch(spark, d) == READER_BATCH_DEFAULT
     assert spark.conf.get(READER_BATCH_KEY) == str(READER_BATCH_DEFAULT)
@@ -85,20 +84,20 @@ def test_env_override(spark, monkeypatch):
     spark.conf.set(READER_BATCH_KEY, str(READER_BATCH_DEFAULT))
 
 
-def test_mixed_dir_session_resets_default(spark):
+def test_mixed_dir_session_resets_default(spark, tmp_path):
     """Round-11 (round-10 advice): after a giant-doc dir lowers the
     session-global batch size, a later load of a NORMAL dir must put
     the full-size default back — otherwise every subsequent scan in a
     mixed-dir session silently reads with the reduced batch."""
     spark.conf.set(READER_BATCH_KEY, str(READER_BATCH_DEFAULT))
-    d = _giant_dir(10_000_000)
+    d = _giant_dir(tmp_path, 10_000_000)
     assert bound_reader_batch(spark, d) < READER_BATCH_DEFAULT
     assert int(spark.conf.get(READER_BATCH_KEY)) < READER_BATCH_DEFAULT
     # normal dir in the same session: conf restored, not just returned
     assert bound_reader_batch(spark, SF_DIR) == READER_BATCH_DEFAULT
     assert spark.conf.get(READER_BATCH_KEY) == str(READER_BATCH_DEFAULT)
     # a dir with no documents table restores too
-    import tempfile
-
-    assert bound_reader_batch(spark, tempfile.mkdtemp()) == READER_BATCH_DEFAULT
+    empty = tmp_path / "no_documents"
+    empty.mkdir()
+    assert bound_reader_batch(spark, str(empty)) == READER_BATCH_DEFAULT
     assert spark.conf.get(READER_BATCH_KEY) == str(READER_BATCH_DEFAULT)

@@ -96,8 +96,7 @@ _EVENT = st.tuples(
 )
 
 
-def _write_events(rows) -> str:
-    d = tempfile.mkdtemp(prefix="bdes_sfuzz_ev_")
+def _write_events(rows, d: str) -> None:
     tbl = pa.table(
         {
             "event_id": pa.array([r[0] for r in rows], pa.int64()),
@@ -109,7 +108,6 @@ def _write_events(rows) -> str:
         }
     )
     pq.write_table(tbl, os.path.join(d, "events.parquet"))
-    return d
 
 
 def _rows(df):
@@ -211,9 +209,10 @@ def test_latency_pipeline_feed_width_invariance_random_logs(spark, name):
         rows=st.lists(_EVENT, min_size=1, max_size=40, unique_by=lambda r: r[0])
     )
     def run(rows):
-        sf_dir = _write_events(rows)
-        single = _run_at_width(spark, build, sf_dir, 1)
-        multi = _run_at_width(spark, build, sf_dir, N_FEED)
+        with tempfile.TemporaryDirectory(prefix="bdes_sfuzz_ev_") as sf_dir:
+            _write_events(rows, sf_dir)
+            single = _run_at_width(spark, build, sf_dir, 1)
+            multi = _run_at_width(spark, build, sf_dir, N_FEED)
         assert multi == single, (
             f"{name}: N={N_FEED} feed diverged from single batch on a "
             f"{len(rows)}-row random log"
@@ -251,9 +250,10 @@ def test_salted_join_equals_unsalted_on_random_logs(spark, how):
         rows=st.lists(_EVENT, min_size=1, max_size=40, unique_by=lambda r: r[0])
     )
     def run(rows):
-        sf_dir = _write_events(rows)
-        unsalted = _run_at_width(spark, build(1), sf_dir, N_FEED)
-        salted = _run_at_width(spark, build(8), sf_dir, N_FEED)
+        with tempfile.TemporaryDirectory(prefix="bdes_sfuzz_ev_") as sf_dir:
+            _write_events(rows, sf_dir)
+            unsalted = _run_at_width(spark, build(1), sf_dir, N_FEED)
+            salted = _run_at_width(spark, build(8), sf_dir, N_FEED)
         assert salted == unsalted, (
             f"salted k=8 {how} join diverged from unsalted on a "
             f"{len(rows)}-row random log"

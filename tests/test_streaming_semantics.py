@@ -63,6 +63,31 @@ def test_multi_batch_stream_matches_batch(spark, tmp_path):
     assert a == b
 
 
+def test_runners_remove_their_checkpoint(spark, tmp_path, monkeypatch):
+    """The one-shot runners own their checkpoint for one call only: no
+    checkpoint dir they started a query with outlives the call. The
+    restart semantics are pinned by the tests below, which keep their
+    own checkpoints."""
+    from pyspark.sql.streaming import DataStreamWriter
+
+    used = []
+    option = DataStreamWriter.option
+
+    def spy(self, key, value):
+        if key == "checkpointLocation":
+            used.append(value)
+        return option(self, key, value)
+
+    monkeypatch.setattr(DataStreamWriter, "option", spy)
+    staged = _staged_events_dir(spark, tmp_path, n_files=2)
+    rows = _stream_staged(spark, staged).select("event_id", "value")
+    n = streams.run_to_memory(rows, "append").count()
+    out = streams.run_foreach_batch_to_parquet(rows, str(tmp_path / "sink"))
+    assert spark.read.parquet(out).count() == n > 0
+    assert len(used) == 2
+    assert [p for p in used if os.path.exists(p)] == []
+
+
 def test_checkpoint_restart_is_exactly_once(spark, tmp_path):
     """Re-running an availableNow foreachBatch sink with the SAME
     checkpoint over the SAME input must append nothing: the checkpoint

@@ -39,7 +39,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import tempfile
 import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -64,19 +63,21 @@ def run_one(spark, build, n_files: int):
     (n, hash_sum, hash_xor))."""
     from pyspark.sql import functions as F
 
+    from big_data_exercise_spark.session import scratch_dir
+
     os.environ["SPARK_GRAFT_STREAM_FEED_FILES"] = str(n_files)
     spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "100000")
     saved = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     name = f"skewsoak_{uuid.uuid4().hex[:12]}"
-    out_dir = tempfile.mkdtemp(prefix="bdes_soak_out_")
+    out_dir = scratch_dir("bdes_soak_out_")
     try:
         q = (
             build().writeStream.format("parquet")
             .queryName(name)
             .outputMode("append")
             .option("path", out_dir)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="bdes_soak_"))
+            .option("checkpointLocation", scratch_dir("bdes_soak_"))
             .start()
         )
         try:

@@ -31,7 +31,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import tempfile
 import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -51,6 +50,8 @@ FAILS: list[str] = []
 def run_with_progress(result, output_mode: str = "append"):
     """Run a streaming plan to completion; return the per-batch
     (state_rows, batch_ms) series for data-carrying batches."""
+    from big_data_exercise_spark.session import scratch_dir
+
     spark = result.sparkSession
     spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "100000")
     saved = spark.conf.get("spark.sql.shuffle.partitions")
@@ -59,7 +60,7 @@ def run_with_progress(result, output_mode: str = "append"):
         result.writeStream.format("memory")
         .queryName(f"soak_{uuid.uuid4().hex[:12]}")
         .outputMode(output_mode)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="bdes_soak_"))
+        .option("checkpointLocation", scratch_dir("bdes_soak_"))
         .start()
     )
     try:
