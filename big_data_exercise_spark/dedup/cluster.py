@@ -26,6 +26,7 @@ quasi-cliques), so diameters are tiny — 3-5 rounds in practice.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from big_data_exercise_spark.session import env_int
@@ -88,6 +89,19 @@ def _driver_union_find(rows) -> dict:
     return {n: find(n) for n in parent}
 
 
+def _driver_components(edges: DataFrame, key: str) -> DataFrame:
+    """(key, cluster_id) for every node the edge list touches, solved
+    by the driver union-find and handed back as an Arrow
+    ``LocalRelation`` — no parallelize job, no Python worker."""
+    roots = _driver_union_find(_collect_edge_pairs(edges))
+    return edges.sparkSession.createDataFrame(
+        pa.table({
+            key: pa.array(list(roots), pa.int64()),
+            "cluster_id": pa.array(list(roots.values()), pa.int64()),
+        })
+    )
+
+
 def connected_components(
     nodes: DataFrame, edges: DataFrame, max_iter: int = 20
 ) -> DataFrame:
@@ -141,11 +155,7 @@ def connected_components(
     # graph (> gate reps in long chains) pays the Pregel loop.
     e = edges.filter(F.col("src") != F.col("dst")).localCheckpoint()
     if e.count() <= _DRIVER_UF_EDGES:
-        roots = _driver_union_find(_collect_edge_pairs(e))
-        spark = nodes.sparkSession
-        comp = spark.createDataFrame(
-            list(roots.items()), schema="node long, cluster_id long"
-        )
+        comp = _driver_components(e, "node")
         return nodes.join(F.broadcast(comp), "node", "left").select(
             "node", F.coalesce("cluster_id", F.col("node")).alias("cluster_id")
         )
@@ -198,11 +208,7 @@ def connected_components(
     # own label via the left join's coalesce — exactly the frontier
     # loop's fixpoint for message-less nodes.
     if ce_dir.count() <= _DRIVER_UF_EDGES:
-        roots = _driver_union_find(_collect_edge_pairs(ce_dir))
-        spark = lab.sparkSession
-        comp = spark.createDataFrame(
-            list(roots.items()), schema="rep long, cluster_id long"
-        )
+        comp = _driver_components(ce_dir, "rep")
         return (
             lab.join(F.broadcast(comp), "rep", "left")
             .select(

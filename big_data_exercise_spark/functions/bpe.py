@@ -42,6 +42,7 @@ pair_count) — k rows, the artifact a tokenizer trainer ships.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window as W, functions as F
 
 from big_data_exercise_spark.functions.text import tokens
@@ -135,7 +136,7 @@ def learn_merges(documents: DataFrame, k: int = K_MERGES) -> DataFrame:
     # convergence-probe job (first()) and its blocks serve that
     # round's merge application — one job per round instead of two.
     lf = _init_symbols(wc).localCheckpoint(eager=False)
-    merges: list[tuple] = []
+    merges: list[dict] = []
     for i in range(1, k + 1):
         # 1-row convergence probe (the iterative-loop exception to the
         # no-collect rule): a corpus can run out of adjacent pairs
@@ -147,13 +148,18 @@ def learn_merges(documents: DataFrame, k: int = K_MERGES) -> DataFrame:
         row = _best_pair(_pair_counts(lf, wc)).first()
         if row is None or row["l"] is None:
             break
-        merges.append((i, row["l"], row["r"], row["c"]))
+        merges.append(
+            {"rank": i, "left_sym": row["l"], "right_sym": row["r"], "pair_count": row["c"]}
+        )
         if i < k:
             lf = _apply_merge(lf, row["l"], row["r"]).localCheckpoint(
                 eager=False
             )
-    schema = "rank int, left_sym string, right_sym string, pair_count long"
-    out = documents.sparkSession.createDataFrame(merges, schema)
+    schema = pa.schema({
+        "rank": pa.int32(), "left_sym": pa.string(),
+        "right_sym": pa.string(), "pair_count": pa.int64(),
+    })
+    out = documents.sparkSession.createDataFrame(pa.Table.from_pylist(merges, schema))
     return out.orderBy("rank")
 
 

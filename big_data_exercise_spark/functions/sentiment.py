@@ -19,6 +19,7 @@ keyword-count fallback semantics.
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F, types as T
 
 POSITIVE = ("fast", "small")
@@ -131,9 +132,9 @@ def aspect_sentiments(documents: DataFrame) -> DataFrame:
         "doc_id",
         F.posexplode(F.split(F.lower(F.col("text")), r"\s+")).alias("pos", "w"),
     )
+    pairs = [(a, k) for a, ks in ASPECTS.items() for k in ks]
     aspects = spark.createDataFrame(
-        [(a, k) for a, ks in ASPECTS.items() for k in ks],
-        "aspect string, kw string",
+        pa.table({"aspect": [a for a, _ in pairs], "kw": [k for _, k in pairs]})
     )
     hits = toks.join(
         F.broadcast(aspects), toks["w"] == aspects["kw"]

@@ -22,6 +22,7 @@ Scale notes:
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from big_data_exercise_spark.functions.numeric import (
@@ -196,7 +197,9 @@ def histogram_with_domain(
     relation → Catalyst broadcasts it; no extra shuffle.
     """
     spark = events.sparkSession
-    domain_df = spark.createDataFrame([(d,) for d in domain], ["event_type"])
+    domain_df = spark.createDataFrame(
+        pa.table({"event_type": pa.array(domain, pa.string())})
+    )
     counts = events.groupBy("event_type").agg(
         F.count("*").alias("n"), exact_sum(F.col("value")).alias("total_value")
     )
@@ -1056,8 +1059,10 @@ def exact_value_quantiles(events: DataFrame) -> DataFrame:
     )
     n = nn.agg(F.count("*").cast("long").alias("n"))
     quants = events.sparkSession.createDataFrame(
-        [(25, 100), (50, 100), (75, 100), (90, 100), (99, 100)],
-        "num int, den int",
+        pa.table({
+            "num": pa.array([25, 50, 75, 90, 99], pa.int32()),
+            "den": pa.array([100] * 5, pa.int32()),
+        })
     )
     targets = quants.crossJoin(F.broadcast(n)).select(
         (F.col("num").cast("double") / F.col("den")).alias("quantile"),

@@ -40,6 +40,7 @@ the gate changes the wall, never the output — pinned by
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from big_data_exercise_spark.session import env_int
@@ -94,28 +95,22 @@ def _driver_pagerank(sym: DataFrame, iters: int, top: int) -> DataFrame | None:
     v_idx = np.searchsorted(nodes, v)
     deg = np.bincount(u_idx, minlength=len(nodes)).astype(np.int64)
     n = len(nodes)
-    if n == 0:  # empty graph: same empty relation the loop produces
-        return sym.sparkSession.createDataFrame(
-            [], schema="kind string, entity_id bigint, rank bigint"
-        )
-    r = np.full(n, SCALE // n, dtype=np.int64)
-    base = np.int64((15 * (SCALE // n)) // 100)
+    r0 = SCALE // max(n, 1)  # an empty graph yields the empty relation
+    r = np.full(n, r0, dtype=np.int64)
+    base = np.int64((15 * r0) // 100)
     for _ in range(iters):
         c = r // deg
         sm = np.zeros(n, dtype=np.int64)
         np.add.at(sm, v_idx, c[u_idx])
         r = base + (85 * sm) // 100
     order = np.lexsort((nodes, -r))[:top]
-    rows = [
-        (
-            "customer" if int(nodes[i]) % 2 == 0 else "supplier",
-            int(nodes[i]) // 2,
-            int(r[i]),
-        )
-        for i in order
-    ]
+    ids = nodes[order]
     return sym.sparkSession.createDataFrame(
-        rows, schema="kind string, entity_id bigint, rank bigint"
+        pa.table({
+            "kind": pa.array(np.where(ids % 2 == 0, "customer", "supplier")),
+            "entity_id": pa.array(ids // 2),
+            "rank": pa.array(r[order]),
+        })
     )
 
 

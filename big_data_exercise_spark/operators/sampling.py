@@ -14,6 +14,7 @@ from __future__ import annotations
 
 from functools import reduce
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from big_data_exercise_spark.functions.numeric import exact_sum
@@ -47,8 +48,11 @@ def emptiness_probes(events: DataFrame) -> DataFrame:
     has_clicks = not events.filter(F.col("event_type") == "click").isEmpty()
     limit0_empty = events.limit(0).isEmpty()
     return spark.createDataFrame(
-        [(no_huge, has_clicks, limit0_empty)],
-        "no_huge boolean, has_clicks boolean, limit0_empty boolean",
+        pa.table({
+            "no_huge": [no_huge],
+            "has_clicks": [has_clicks],
+            "limit0_empty": [limit0_empty],
+        })
     )
 
 

@@ -73,66 +73,22 @@ def top_k_per_group(events: DataFrame, k: int = 3) -> DataFrame:
     parallelism at 5 and sorts ~n/5 rows per task — a funnel at 100×.
     And unlike NTILE/percent_rank (which need every row's exact rank —
     see :func:`value_ranks`), top-k only needs k SURVIVORS per group,
-    so the fact table never has to shuffle at all: each scan partition
-    truncates itself to k rows per group inside one Arrow
-    ``mapInPandas`` pass (local top-k under the same total order is
-    superset-safe — every global top-k row is a local top-k row), and
-    only ≤ k·groups·partitions rows reach the small partitioned merge
+    so the fact table never has to shuffle at all: Catalyst's
+    ``InferWindowGroupLimit`` plans the ``rk <= k`` filter as
+    ``WindowGroupLimit … Partial`` below the Exchange — each scan
+    partition truncates itself to k rows per group (local top-k under
+    the same total order is superset-safe: every global top-k row is a
+    local top-k row) — and ``… Final`` above it, so only
+    ≤ k·groups·partitions rows reach the small partitioned merge
     window.  Same pattern as knn.cosine_topk_batch, plan-test pinned
-    there and here.
-
-    NaN/NULL order parity: the merge window's ``desc(value)`` ranks
-    NaN ABOVE every finite value (Spark's float total order) and NULL
-    last — but pandas conflates NULL and NaN (both arrive as NaN) and
-    sorts them together, so a bare pandas sort would truncate a NaN
-    row the window would rank first.  The ``__nan`` flag is computed
-    SPARK-side (where NaN and NULL are still distinct) and leads the
-    kernel's sort key, making the local order exactly the window's:
-    NaN first, finite desc, NULL last.  The flag also RESTORES the NaN
-    after the kernel: Arrow's pandas conversion reads NaN as null
-    (nan_as_null), so without the flag a surviving NaN row would
-    re-enter Spark as NULL and the merge window would rank it last."""
-    sel = events.select(
-        "event_type", "event_id", "user_id", "value",
-        F.coalesce(F.isnan("value"), F.lit(False)).alias("__nan"),
-    )
-
-    def _local_topk(batches):
-        import pandas as pd
-
-        carry = None
-        for pdf in batches:
-            cur = pdf if carry is None else pd.concat([carry, pdf])
-            # na_position='last' puts NULL values (NaN with __nan
-            # False) after all finite rows; true NaN rows carry
-            # __nan=True and sort first, tie-broken on event_id.
-            cur = cur.sort_values(
-                ["event_type", "__nan", "value", "event_id"],
-                ascending=[True, False, False, True],
-                kind="mergesort",
-                na_position="last",
-            )
-            # dropna=False: a NULL group is still a group (the window
-            # form partitions on it like any other value)
-            carry = cur.groupby("event_type", sort=False, dropna=False).head(k)
-        if carry is not None:
-            yield carry
-
+    there and here.  Both limits sort in Spark's float total order:
+    under ``desc(value)`` NaN ranks above every finite value and NULL
+    last."""
     from big_data_exercise_spark.functions.numeric import round_det
 
-    local = (
-        sel.mapInPandas(_local_topk, schema=sel.schema)
-        .withColumn(
-            "value",
-            F.when(F.col("__nan"), F.lit(float("nan")).cast("double")).otherwise(
-                F.col("value")
-            ),
-        )
-        .drop("__nan")
-    )
     w = W.partitionBy("event_type").orderBy(F.desc("value"), "event_id")
     return (
-        local.withColumn("rk", F.row_number().over(w))
+        events.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= k)
         .select(
             "event_type", "rk", "event_id", "user_id",

@@ -90,6 +90,15 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
+def _on_docs(op, feed):
+    """Build ``op(docs, feed(docs))`` over ONE load of the documents
+    table — each load runs its own parquet schema-inference job."""
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        docs = _t(spark, sf_dir, "documents")
+        return op(docs, feed(docs))
+    return build
+
+
 # ---------------------------------------------------------------- helpers
 def _cos_sql(a: str, b: str, dim: int = 64) -> str:
     """DuckDB cosine between two list<float> expressions, mirroring
@@ -2012,11 +2021,9 @@ def _specs() -> list[QuerySpec]:
         # Oracle side: recursive transitive closure over the full
         # quadratic pair set — closure is connectivity-invariant, so
         # the two sides still hash-match.
-        lambda sp, d: cluster.dedup_cluster_assignment(
-            _t(sp, d, "documents"),
-            minhash.near_duplicate_edges(
-                _t(sp, d, "documents"), use_vocab_ranks=True
-            ),
+        _on_docs(
+            cluster.dedup_cluster_assignment,
+            lambda docs: minhash.near_duplicate_edges(docs, use_vocab_ranks=True),
         ),
         f"""
         WITH RECURSIVE {_MINHASH_CTES},
@@ -2047,10 +2054,7 @@ def _specs() -> list[QuerySpec]:
         # differ from the vocab mode only where LSH banding luck
         # differs — parity on a planted-duplicate corpus is
         # property-tested (tests/test_dedup_cluster.py).
-        lambda sp, d: cluster.dedup_cluster_assignment(
-            _t(sp, d, "documents"),
-            minhash.near_duplicate_edges(_t(sp, d, "documents")),
-        ),
+        _on_docs(cluster.dedup_cluster_assignment, minhash.near_duplicate_edges),
         None,
         ("dedup", "cluster", "production"),
         "production closure: xxhash64 edge feed → star-contraction CC",
@@ -2164,16 +2168,13 @@ def _specs() -> list[QuerySpec]:
         # generator: substring-level clusters from winnowing overlaps.
         # Demonstrates the closure is generic over any verified edge
         # list (MinHash, winnowing, embedding-LSH, ...).
-        lambda sp, d: cluster.dedup_cluster_assignment(
-            _t(sp, d, "documents"),
-            winnow.closure_pairs_auto(_t(sp, d, "documents")),
-            # auto-routed closure feed (round-6): probes the exact-dup
-            # collapse ratio, takes the Σk star-edge feed when
-            # collapse bites (dup-heavy corpus) and the pair report
-            # otherwise (measured 1.4× faster on THIS no-exact-dup
-            # corpus); components — and so this query's output and
-            # oracle hash — are identical either way
-        ),
+        # auto-routed closure feed (round-6): probes the exact-dup
+        # collapse ratio, takes the Σk star-edge feed when
+        # collapse bites (dup-heavy corpus) and the pair report
+        # otherwise (measured 1.4× faster on THIS no-exact-dup
+        # corpus); components — and so this query's output and
+        # oracle hash — are identical either way
+        _on_docs(cluster.dedup_cluster_assignment, winnow.closure_pairs_auto),
         f"""
         WITH RECURSIVE {_WINNOW_CTES},
         pairs AS (
@@ -2195,16 +2196,8 @@ def _specs() -> list[QuerySpec]:
     ))
     s.append(QuerySpec(
         "dedup_kept_corpus",
-        lambda sp, d: cluster.kept_corpus_stats(
-            _t(sp, d, "documents"),
-            winnow.closure_pairs_auto(_t(sp, d, "documents")),
-            # auto-routed closure feed (round-6): probes the exact-dup
-            # collapse ratio, takes the Σk star-edge feed when
-            # collapse bites (dup-heavy corpus) and the pair report
-            # otherwise (measured 1.4× faster on THIS no-exact-dup
-            # corpus); components — and so this query's output and
-            # oracle hash — are identical either way
-        ),
+        # auto-routed closure feed: see winnowing_cluster_assignment
+        _on_docs(cluster.kept_corpus_stats, winnow.closure_pairs_auto),
         f"""
         WITH RECURSIVE {_WINNOW_CTES},
         pairs AS (
@@ -2232,16 +2225,8 @@ def _specs() -> list[QuerySpec]:
     ))
     s.append(QuerySpec(
         "curated_corpus",
-        lambda sp, d: text.curated_corpus(
-            _t(sp, d, "documents"),
-            winnow.closure_pairs_auto(_t(sp, d, "documents")),
-            # auto-routed closure feed (round-6): probes the exact-dup
-            # collapse ratio, takes the Σk star-edge feed when
-            # collapse bites (dup-heavy corpus) and the pair report
-            # otherwise (measured 1.4× faster on THIS no-exact-dup
-            # corpus); components — and so this query's output and
-            # oracle hash — are identical either way
-        ),
+        # auto-routed closure feed: see winnowing_cluster_assignment
+        _on_docs(text.curated_corpus, winnow.closure_pairs_auto),
         f"""
         WITH RECURSIVE {_WINNOW_CTES},
         pairs AS (
@@ -5210,16 +5195,8 @@ def _specs() -> list[QuerySpec]:
     ))
     s.append(QuerySpec(
         "governed_corpus",
-        lambda sp, d: text.governed_corpus(
-            _t(sp, d, "documents"),
-            winnow.closure_pairs_auto(_t(sp, d, "documents")),
-            # auto-routed closure feed (round-6): probes the exact-dup
-            # collapse ratio, takes the Σk star-edge feed when
-            # collapse bites (dup-heavy corpus) and the pair report
-            # otherwise (measured 1.4× faster on THIS no-exact-dup
-            # corpus); components — and so this query's output and
-            # oracle hash — are identical either way
-        ),
+        # auto-routed closure feed: see winnowing_cluster_assignment
+        _on_docs(text.governed_corpus, winnow.closure_pairs_auto),
         f"""
         WITH RECURSIVE {_WINNOW_CTES},
         pairs AS (

@@ -289,41 +289,33 @@ def cosine_topk_batch(
     through a single codegen'd cosine per (row, query) pair, never
     shuffled by the join.
 
-    Scale shape — partition-local top-k, then merge: each scan
-    partition truncates its own scored slice to k rows per query
-    inside ONE Arrow ``mapInPandas`` pass (narrow — nothing moves),
-    so the only shuffle in the plan carries ≤ k·partitions rows per
-    query into a small PARTITIONED merge window.  The naive
-    alternative — `row_number` over `partitionBy(query_id)` on the
-    full scored relation — shuffles corpus×queries rows and caps
-    parallelism at n_queries with each query's whole scored corpus in
-    one task.  Local top-k under the same total order (cos_sim desc,
-    vec_id asc) is superset-safe: every global top-k row is a local
-    top-k row in its partition.
+    Scale shape — partition-local top-k, then merge: the plan ends in
+    ``row_number().over(partitionBy(query_id)…) <= k``, which
+    Catalyst's ``InferWindowGroupLimit`` plans as ``WindowGroupLimit
+    … Partial`` below the Exchange (each scan partition truncates its
+    own scored slice to k rows per query — narrow, nothing moves) and
+    ``… Final`` above it, so the only shuffle carries ≤ k·partitions
+    rows per query into the merge window, never corpus×queries rows
+    (inferred for k up to ``spark.sql.optimizer.windowGroupLimitThreshold``,
+    1000 by default).
+    Local top-k under the same total order (cos_sim desc, vec_id asc)
+    is superset-safe: every global top-k row is a local top-k row in
+    its partition.
 
     Output: (query_id, vec_id, label, cos_sim, rank), self-matches
-    excluded, ties broken on vec_id.
-
-    NaN/NULL order parity (dirty corpora): a NaN cosine (NaN vector
-    elements) ranks ABOVE every finite value in the merge window's
-    ``desc(cos_sim)`` (Spark float total order) while a NULL cosine
-    (zero-norm division) ranks last — but pandas conflates both into
-    NaN, so a bare kernel sort would truncate the NaN rows the window
-    ranks first.  The ``__nan`` flag is computed Spark-side, leads the
-    kernel's sort key (making the local order exactly the window's),
-    and restores the NaN after the kernel — Arrow's pandas conversion
-    reads NaN as null (nan_as_null), so a surviving NaN row would
-    otherwise re-enter Spark as NULL and rank last in the merge.
+    excluded, ties broken on vec_id.  NaN/NULL order (dirty corpora):
+    both limits sort in Spark's float total order, so a NaN cosine
+    (NaN vector elements) ranks above every finite value under
+    ``desc(cos_sim)`` and a NULL cosine (zero-norm division) last.
     """
     queries = embeddings.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q")
     )
     # The raw cosine is materialized in its own projection: round_det
-    # references its argument ~6× and the __nan flag once more, and
-    # inlined that replicated the 3×64-term chain ~12× per (row,
-    # query) pair — past the 64 KB codegen method limit into
-    # interpreted fallback (measured 3.5× wall at sf0.1). round_det
-    # passes NaN through untouched, so isnan(raw) ≡ isnan(rounded).
+    # references its argument ~6×, and inlined that replicated the
+    # 3×64-term chain per (row, query) pair past the 64 KB codegen
+    # method limit into interpreted fallback (measured 3.5× wall at
+    # sf0.1).
     scored = (
         embeddings.crossJoin(F.broadcast(queries))
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -336,39 +328,11 @@ def cosine_topk_batch(
             "vec_id",
             "label",
             round_det(F.col("__cos_raw"), 4).alias("cos_sim"),
-            F.coalesce(F.isnan("__cos_raw"), F.lit(False)).alias("__nan"),
         )
-    )
-
-    def _local_topk(batches):
-        import pandas as pd
-
-        carry = None
-        for pdf in batches:
-            cur = pdf if carry is None else pd.concat([carry, pdf])
-            cur = cur.sort_values(
-                ["query_id", "__nan", "cos_sim", "vec_id"],
-                ascending=[True, False, False, True],
-                kind="mergesort",
-                na_position="last",
-            )
-            carry = cur.groupby("query_id", sort=False).head(k)
-        if carry is not None:
-            yield carry[["query_id", "vec_id", "label", "cos_sim", "__nan"]]
-
-    local = (
-        scored.mapInPandas(_local_topk, schema=scored.schema)
-        .withColumn(
-            "cos_sim",
-            F.when(F.col("__nan"), F.lit(float("nan")).cast("double")).otherwise(
-                F.col("cos_sim")
-            ),
-        )
-        .drop("__nan")
     )
     w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), "vec_id")
     return (
-        local.withColumn("rank", F.row_number().over(w))
+        scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "vec_id", "label", "cos_sim", "rank")
     )

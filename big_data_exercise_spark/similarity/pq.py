@@ -25,10 +25,10 @@ vectors. Jégou et al.'s public PQ construction, relationally:
    distance = SUM of m LUT probes, one hash-join + partial agg over
    the code table; no vector math in the corpus pass.
 4. **Shortlist + exact re-rank** — partition-local top-(r·k) per query
-   under the total order (adist, vec_id) inside one Arrow mapInPandas
-   pass (superset-safe: a global top row is a local top row), merged
-   in a small partitioned window, then exact integer L2 re-rank of the
-   ≤ n_queries·r·k survivors against the true vectors.
+   under the total order (adist, vec_id) as Catalyst's WindowGroupLimit
+   (Partial below the Exchange, Final above it — superset-safe: a
+   global top row is a local top row), then exact integer L2 re-rank
+   of the ≤ n_queries·r·k survivors against the true vectors.
 
 Scale shape: the only full-corpus operations are the Lloyd joins
 (broadcast centroid table, same as kmeans.py) and the code-table agg
@@ -324,23 +324,13 @@ def pq_topk(
         .filter(F.col("vid") != F.col("qid"))
     )
 
+    # Shortlist: Catalyst plans ``srank <= r·k`` as a partition-local
+    # WindowGroupLimit (Partial) below the Exchange and a Final one
+    # above it, so only ≤ r·k rows per (query, partition) shuffle.
     shortlist_n = rerank * k
-
-    def _local_topk(batches):
-        import pandas as pd
-
-        carry = None
-        for pdf in batches:
-            cur = pdf if carry is None else pd.concat([carry, pdf])
-            cur = cur.sort_values(["qid", "adist", "vid"], kind="mergesort")
-            carry = cur.groupby("qid", sort=False).head(shortlist_n)
-        if carry is not None:
-            yield carry
-
-    local = scores.mapInPandas(_local_topk, schema=scores.schema)
     wq = W.partitionBy("qid").orderBy("adist", "vid")
     shortlist = (
-        local.withColumn("srank", F.row_number().over(wq))
+        scores.withColumn("srank", F.row_number().over(wq))
         .filter(F.col("srank") <= shortlist_n)
         .select("qid", "vid", "adist")
     )

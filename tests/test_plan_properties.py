@@ -275,18 +275,87 @@ def test_no_unpartitioned_windows(spark, name):
     assert windowed or name in window_free_ok
 
 
-def test_top_k_per_group_never_shuffles_fact_table(spark):
-    """top-k per group must not shuffle the fact table: each scan
-    partition truncates itself to k rows per group in one Arrow pass,
-    and the only Exchange sits ABOVE that truncation (it carries
-    <= k*groups*partitions rows into the merge window). A plan where
-    an Exchange feeds the MapInPandas means the truncation stopped
-    protecting the shuffle."""
-    plan = _plan(spark, "top_k_per_group")
-    assert "MapInPandas" in plan
-    below_truncation = plan[plan.index("MapInPandas"):]
-    assert "Exchange" not in below_truncation
-    assert "BatchEvalPython" not in plan
+def _plan_nodes(plan: str) -> list[tuple[int, str]]:
+    """(depth, node text) per line of a formatted physical plan."""
+    out = []
+    for line in plan.splitlines():
+        text = line.lstrip(" +-:")
+        out.append((len(line) - len(text), text))
+    return out
+
+
+# top-k query → the relation its truncation reads
+_TOPK_FEEDS = {
+    "top_k_per_group": "FileScan parquet",  # the fact-table scan
+    "knn_batch_topk": "BroadcastNestedLoopJoin",  # corpus × query set
+    "pq_topk": "HashAggregate",  # per-(query, vector) ADC sum
+}
+
+
+@pytest.mark.parametrize("name", list(_TOPK_FEEDS))
+def test_top_k_truncates_below_the_merge_exchange(spark, name):
+    """Top-k per key must not shuffle the rows it ranks: Catalyst plans
+    ``row_number() <= k`` as ``WindowGroupLimit … Partial`` in every
+    partition and ``… Final`` above the Exchange, so the shuffle into
+    the merge window carries <= k rows per key and partition. Every
+    Final limit is fed (through its sort) by a hash Exchange over a
+    Partial limit, and no Exchange sits between the truncation and the
+    relation it truncates. The fact-scan and kNN forms never shuffle
+    below the truncation at all and start no Python worker."""
+    plan = _plan(spark, name)
+    nodes = _plan_nodes(plan)
+    finals = [
+        i for i, (_, t) in enumerate(nodes)
+        if t.startswith("WindowGroupLimit") and t.endswith("Final")
+    ]
+    assert finals
+    for i in finals:
+        assert [t.split(" ")[0] for _, t in nodes[i + 1:i + 4]] == [
+            "Sort", "Exchange", "WindowGroupLimit",
+        ]
+        assert nodes[i + 2][1].startswith("Exchange hashpartitioning")
+        depth, partial = nodes[i + 3]
+        assert partial.endswith("Partial")
+        below = []
+        for d, t in nodes[i + 4:]:
+            if d <= depth:
+                break
+            below.append(t)
+        head = next(
+            k for k, t in enumerate(below) if t.startswith(_TOPK_FEEDS[name])
+        )
+        assert all(t.startswith(("Sort", "Project")) for t in below[:head])
+        if name != "pq_topk":
+            assert not any(t.startswith("Exchange") for t in below)
+    if name != "pq_topk":
+        for python_stage in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+            assert python_stage not in plan
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "dedup_cluster_assignment",  # driver union-find components
+        "pagerank_trade",  # driver replay arm at this scale
+        "histogram_domain_fill",
+        "exact_value_quantiles",
+        "is_empty_probe",
+        "absa_aspect_sentiments",
+        "bpe_merge_rules",
+    ],
+)
+def test_driver_built_frames_never_parallelize(spark, monkeypatch, name):
+    """Frames the driver builds enter the plan as Arrow LocalRelations:
+    ``createDataFrame`` over a Python list would ``parallelize`` it
+    into a Python RDD, and the job that reads it would start a Python
+    worker for rows the driver already holds."""
+    from pyspark import SparkContext
+
+    def _refuse(self, *args, **kwargs):
+        raise AssertionError("SparkContext.parallelize called")
+
+    monkeypatch.setattr(SparkContext, "parallelize", _refuse)
+    assert SPECS[name].build(spark, SF_DIR).collect()
 
 
 def test_grouped_rank_is_range_partitioned(spark):

@@ -1726,13 +1726,11 @@ def test_grouped_running_sum_matches_window_with_negatives(spark):
 
 
 def test_top_k_per_group_nan_null_order_parity(spark):
-    """The Arrow local-truncation kernel must rank NaN/NULL exactly as
-    the window form it replaces: NaN above every finite value (Spark's
-    float total order under desc), NULL last.  pandas conflates NULL
-    and NaN, so without the Spark-side __nan flag the kernel truncates
-    a NaN row the merge window would rank first (round-6 finding).
-    coalesce(1) forces every row through one kernel instance so the
-    local truncation actually bites."""
+    """The partition-local truncation must rank NaN/NULL exactly as
+    the plain window form: NaN above every finite value (Spark's float
+    total order under desc), NULL last, and a surviving NaN comes back
+    as NaN, not NULL.  coalesce(1) puts every row in one partition so
+    the local truncation actually bites."""
     import math
 
     from pyspark.sql import Window as W
@@ -1771,11 +1769,11 @@ def test_top_k_per_group_nan_null_order_parity(spark):
 
 
 def test_knn_batch_nan_null_order_parity(spark):
-    """cosine_topk_batch's local-truncation kernel under a dirty
-    corpus: a NaN cosine (NaN vector element) must rank first in the
-    merge window's float total order, a NULL cosine (zero-norm
-    division) last — identical to the plain-window twin over the same
-    scored relation."""
+    """cosine_topk_batch's partition-local truncation under a dirty
+    corpus: a NaN cosine (NaN vector element) must rank first in
+    Spark's float total order, a NULL cosine (zero-norm division) last
+    — identical to the plain-window twin over the same scored
+    relation."""
     from pyspark.sql import Window as W
 
     from big_data_exercise_spark.functions.arrays import EMBEDDING_DIM
