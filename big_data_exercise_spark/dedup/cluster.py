@@ -29,17 +29,16 @@ from __future__ import annotations
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
-from big_data_exercise_spark.session import env_int
-
 # Max node-label rows the contraction rewrite will force-broadcast.
 # The raw payload is ~16 B/row, but a broadcast materializes as a JVM
 # LongHashedRelation (typically 2-4× the raw bytes) plus a driver-side
 # collect, so the 5 M default assumes this repo's 16 g driver/executor
-# sizing — roughly 100 MB raw → a few hundred MB resident. Deployments
-# with smaller executors should lower it via the env knob; past the
+# sizing — roughly 100 MB raw → a few hundred MB resident. Past the
 # threshold the rewrite degrades to a shuffle join (correct at any
-# scale, just not the local fast path).
-_BROADCAST_LABEL_ROWS = env_int("SPARK_GRAFT_BROADCAST_LABEL_ROWS", 5_000_000)
+# scale, just not the local fast path). Without the hint the pull-back
+# join plans as a sort-merge join even on the 1,250-doc benchmark
+# corpus (PLANS.md, "Size gates: which stay and why").
+_BROADCAST_LABEL_ROWS = 5_000_000
 
 # Max CONTRACTED edge rows solved with a driver-side union-find instead
 # of the iterative frontier loop (round 11). Rationale: after star
@@ -51,7 +50,7 @@ _BROADCAST_LABEL_ROWS = env_int("SPARK_GRAFT_BROADCAST_LABEL_ROWS", 5_000_000)
 # the collect is the same driver transfer a broadcast build would do;
 # the union-find is O(E α(E)) on ≤ ~16 B/row metadata. Past the gate
 # the Pregel loop runs unchanged — correct at any scale.
-_DRIVER_UF_EDGES = env_int("SPARK_GRAFT_DRIVER_UF_EDGES", 1_000_000)
+_DRIVER_UF_EDGES = 1_000_000
 
 
 def _collect_edge_pairs(df: DataFrame):
@@ -174,9 +173,10 @@ def connected_components(
         # re-trigger pair generation
     )
     # lab is one row per NODE — corpus-scale, not size-invariant. A
-    # checkpointed frame carries no stats (sizeInBytes defaults to
-    # max), so Catalyst never broadcasts it on its own and the rewrite
-    # runs as a stats-blind sort-merge join (the AQE byte-coalesce
+    # checkpointed frame keeps only its pre-checkpoint size estimate
+    # (far past the broadcast threshold; PLANS.md "Size gates"), so
+    # Catalyst never broadcasts it on its own and the rewrite runs as
+    # a sort-merge join (the AQE byte-coalesce
     # trap PLANS.md documents); the explicit hint is the measured
     # local win. But force-broadcasting 10⁹ node labels is an executor
     # OOM at the 100 TB regime, so the hint is GATED on the

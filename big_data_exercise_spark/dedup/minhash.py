@@ -47,15 +47,14 @@ from pyspark.sql import DataFrame, functions as F
 
 from big_data_exercise_spark.functions.numeric import round_det_nn
 from big_data_exercise_spark.functions.text import tokens
-from big_data_exercise_spark.session import env_int
 
 P = 8191
 # Max distinct-token-set rows the verify stage will force-broadcast
 # (one sorted int array per rep, ~200 B at the typical token budget →
 # a few hundred MB resident at the cap, same sizing rationale as the
-# closure's SPARK_GRAFT_BROADCAST_LABEL_ROWS). Past it, the verify
-# joins run as the stats-blind shuffle plan — correct at any scale.
-_BROADCAST_SET_ROWS = env_int("SPARK_GRAFT_BROADCAST_SET_ROWS", 1_000_000)
+# closure's cluster._BROADCAST_LABEL_ROWS). Past it, the verify joins
+# run as the sort-merge shuffle plan — correct at any scale.
+_BROADCAST_SET_ROWS = 1_000_000
 # Fixed universal-hash parameters (k=12). Public textbook construction:
 # h_j(x) = (A[j]*x + B[j]) mod P with odd A.
 A = (3, 5, 7, 11, 13, 17, 19, 23, 29, 31, 37, 41)
@@ -321,7 +320,7 @@ def _verified_rep_pairs(
     # one cheap scan). Under the gate the bucket join broadcasts its
     # build side and the verify set tables broadcast too, so the
     # candidate pairs never hit an exchange; past it every join runs
-    # the stats-blind shuffle plan — correct at any scale.
+    # the sort-merge shuffle plan — correct at any scale.
     _small = reps.count() <= _BROADCAST_SET_ROWS
     cand = lsh_candidate_pairs(
         sigs, num_hashes, bands, broadcast_build=_small
@@ -332,11 +331,12 @@ def _verified_rep_pairs(
     # (sort_array for the merge-style intersect; no aggregation). They
     # are one compact row per DISTINCT token set, so up to the gate
     # below they ship as broadcasts and the candidate table — the big
-    # side — is never exchanged or sorted for verify. (Round 11: the
-    # checkpointed lineage carries no stats, so Catalyst alone planned
-    # these joins as SortMergeJoin — two full Exchange+Sort passes
-    # over the candidate pairs, measured at sf0.1. The explicit gated
-    # hint is the same pattern as the closure's label broadcast.)
+    # side — is never exchanged or sorted for verify. (A checkpoint
+    # keeps only its pre-checkpoint size estimate — 1.92 GB for this
+    # set table on the 1,250-doc benchmark corpus — so Catalyst alone
+    # plans these joins as SortMergeJoin: two full Exchange+Sort passes
+    # over the candidate pairs, measured slower at sf0.1. The explicit
+    # gated hint is the same pattern as the closure's label broadcast.)
     sets_int = rep_ids.select("doc_id", F.sort_array("ids").alias("toks"))
     a = sets_int.select(
         F.col("doc_id").alias("id1"),

@@ -35,10 +35,8 @@ _POW = [31 ** (K - 1 - j) for j in range(K)]
 def _norm_text(col=None):
     """The kernel's text normalization — lowercase printable ASCII —
     as a single shared expression. The exact-dup collapse
-    (:func:`_collapsed_fingerprints`), the relational fingerprint twin
-    and the routing probe (:func:`exact_dup_fraction`) must all agree
-    on this byte-for-byte: the probe's collapse estimate routes the
-    closure feed onto the collapse the edge path actually performs."""
+    (:func:`_collapsed_fingerprints`) and the relational fingerprint
+    twin must agree on this byte-for-byte."""
     return F.lower(
         F.regexp_replace(col if col is not None else F.col("text"), r"[^\x20-\x7e]", "")
     )
@@ -196,8 +194,9 @@ def _collapsed_fingerprints(documents: DataFrame, k: int = K, w: int = WIN):
     # ONE aggregation picks each cluster's representative doc AND its
     # text (min_by ties the text to the min doc_id) — no join back
     # against the corpus. A join formulation here is a trap twice
-    # over: checkpointed inputs carry unknown stats, so Catalyst plans
-    # a sort-merge join, and AQE byte-coalesces its exchanges (~1 MB
+    # over: a checkpointed input keeps only its pre-checkpoint size
+    # estimate, far past the broadcast threshold, so Catalyst plans a
+    # sort-merge join, and AQE byte-coalesces its exchanges (~1 MB
     # of rep text → 3 partitions), starving the CPU-bound fingerprint
     # kernel downstream. The explicit repartition pins kernel
     # parallelism to the session's shuffle.partitions (the
@@ -418,93 +417,3 @@ def overlap_edges(
     )
     return rep_shared.select("id1", "id2").unionByName(stars)
 
-
-# --- closure-feed auto-routing ------------------------------------------
-
-# Fraction of docs that are exact (normalized-text) duplicates at
-# which the closure consumers switch from the quadratic pair report
-# to the Σk star-edge feed. Measured on THIS corpus (no exact dups):
-# the report path is ~1.4× faster at sf0.1 because the collapse adds
-# a pass that collapses nothing; measured at 100× dup-heavy
-# replication: the edge path runs at ~1.0–1.35× base wall where the
-# report feed implies tens of billions of closure-input rows
-# (PLANS.md, round-5 winnow-edge measurements). 10% duplicates is
-# comfortably past the crossover: each k-member cluster already costs
-# the report k(k−1)/2 rows vs the stars' k−1.
-DUP_ROUTE_FRACTION = 0.10
-
-# Most recent routing decision — written by closure_pairs_auto,
-# read by tests and scale harnesses (the returned DataFrame cannot
-# carry plan provenance once either branch resolves to plain ops).
-LAST_ROUTE: dict = {}
-
-
-# exact_dup_fraction memo: four closure registry queries probe the
-# same corpus; without this each one re-runs the identical full-scan
-# aggregate at plan-build time (round-6 review finding). Keyed on
-# (input files, analyzed plan) so a filtered/derived corpus over the
-# same files never shares an entry; in-memory inputs (no files) skip
-# the cache entirely.
-_DUP_FRACTION_CACHE: dict[tuple, float] = {}
-
-
-def _dup_fraction_key(documents: DataFrame):
-    try:
-        files = tuple(sorted(documents.inputFiles()))
-        if not files:
-            return None
-        plan = documents._jdf.queryExecution().analyzed().toString()
-        return (files, plan)
-    except Exception:
-        return None
-
-
-def exact_dup_fraction(documents: DataFrame, use_cache: bool = True) -> float:
-    """Fraction of docs whose normalized text (the kernel's own
-    printable-ASCII + lowercase normalization — identical to
-    :func:`_collapsed_fingerprints`) duplicates another doc's: one
-    count+count_distinct aggregate, a single cheap corpus pass next
-    to the 8-gram rolling-hash fingerprint kernel both downstream
-    paths run. Memoized per (input files, analyzed plan) so the four
-    closure consumers probe a given corpus once per process."""
-    key = _dup_fraction_key(documents) if use_cache else None
-    if key is not None and key in _DUP_FRACTION_CACHE:
-        return _DUP_FRACTION_CACHE[key]
-    row = documents.agg(
-        F.count("doc_id").alias("n"),
-        F.count_distinct(F.md5(_norm_text())).alias("s"),
-    ).collect()[0]
-    frac = 0.0 if not row["n"] else 1.0 - row["s"] / row["n"]
-    if key is not None:
-        _DUP_FRACTION_CACHE[key] = frac
-    return frac
-
-
-def closure_pairs_auto(
-    documents: DataFrame,
-    min_shared: int = 20,
-    k: int = K,
-    w: int = WIN,
-    max_bucket: int | None = None,
-    route_at: float = DUP_ROUTE_FRACTION,
-) -> DataFrame:
-    """The (id1, id2) feed a CLOSURE consumer (connected components →
-    cluster assignment / kept-corpus stats) should use: probes the
-    exact-dup collapse ratio and routes to :func:`overlap_edges` when
-    collapse bites (``dup fraction ≥ route_at``), else to the plain
-    :func:`overlap_pairs` report — the measured-faster path on
-    corpora without exact duplicates. Both feeds reach identical
-    connected components by construction (star-edge equivalence,
-    fuzz-tested), so consumers see the same result either way; only
-    the plan changes. The probe is one aggregate returning one row —
-    the same bounded-literal-fetch pattern as the z-order cutpoint
-    collect."""
-    frac = exact_dup_fraction(documents)
-    route = "edges" if frac >= route_at else "report"
-    LAST_ROUTE.clear()
-    LAST_ROUTE.update({"dup_fraction": round(frac, 4), "route": route})
-    if route == "edges":
-        return overlap_edges(documents, min_shared, k, w, max_bucket)
-    return overlap_pairs(documents, min_shared, k, w, max_bucket).select(
-        "id1", "id2"
-    )

@@ -26,8 +26,8 @@ is one join + one aggregation keyed on node id — the same exchange
 every round, reusable under a pre-repartition. State is one row per
 node. In the distributed regime there is no driver-side collect: the
 node count enters the plan as a broadcast 1-row aggregate, not a
-Python scalar. Below a row-count gate (``SPARK_GRAFT_DRIVER_PR_EDGES``,
-default 1 M — the same knob shape as the closure's union-find gate)
+Python scalar. Below a row-count gate (``_DRIVER_PR_EDGES``, 1 M
+symmetric edges — the same shape as the closure's union-find gate)
 the power iteration runs on the driver over one Arrow ``toPandas`` of
 the already-materialized symmetric edge list: at toy scale each
 distributed round costs ~3 scheduler jobs of pure overhead for a
@@ -43,8 +43,6 @@ from __future__ import annotations
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
-from big_data_exercise_spark.session import env_int
-
 SCALE = 10**12  # fixed-point: rank 1.0 ≙ SCALE
 
 # Driver-solve gate for the power iteration (row count of the
@@ -52,7 +50,7 @@ SCALE = 10**12  # fixed-point: rank 1.0 ≙ SCALE
 # _DRIVER_UF_EDGES: below it, iterating on the driver replaces
 # ~3 scheduler jobs per round; past it, the relational loop runs
 # unchanged (correct at any scale).
-_DRIVER_PR_EDGES = env_int("SPARK_GRAFT_DRIVER_PR_EDGES", 1_000_000)
+_DRIVER_PR_EDGES = 1_000_000
 
 
 def trade_edges(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
@@ -118,8 +116,8 @@ def pagerank(edges: DataFrame, iters: int = 3, top: int = 20) -> DataFrame:
     """Top-``top`` nodes by damped PageRank after ``iters`` power
     iterations. Output: (kind, entity_id, rank) ordered by rank desc
     with a total deterministic tie-break on the interleaved node id.
-    Symmetric edge lists of at most ``SPARK_GRAFT_DRIVER_PR_EDGES``
-    rows are solved on the driver; 0 forces the distributed loop."""
+    Symmetric edge lists of at most ``_DRIVER_PR_EDGES`` rows are
+    solved on the driver; larger ones run the distributed loop."""
     flip = edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     # bipartite + distinct input ⇒ the flipped set is disjoint (id
     # parity differs), so a plain union IS the symmetric closure.
@@ -138,7 +136,7 @@ def pagerank(edges: DataFrame, iters: int = 3, top: int = 20) -> DataFrame:
     # gathers the first million rows into one task) and, worse, it
     # materializes only the partitions the limit touched — the
     # toPandas then re-runs the orders⋈lineitem lineage for the rest.
-    if _DRIVER_PR_EDGES > 0 and sym.count() <= _DRIVER_PR_EDGES:
+    if sym.count() <= _DRIVER_PR_EDGES:
         res = _driver_pagerank(sym, iters, top)
         if res is not None:
             return res  # None → negative node ids → relational loop

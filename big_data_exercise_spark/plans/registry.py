@@ -90,12 +90,12 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-def _on_docs(op, feed):
-    """Build ``op(docs, feed(docs))`` over ONE load of the documents
-    table — each load runs its own parquet schema-inference job."""
+def _on(table: str, op, feed):
+    """Build ``op(df, feed(df))`` over ONE load of ``table`` — each
+    load runs its own parquet schema-inference job."""
     def build(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = _t(spark, sf_dir, "documents")
-        return op(docs, feed(docs))
+        df = _t(spark, sf_dir, table)
+        return op(df, feed(df))
     return build
 
 
@@ -2021,7 +2021,8 @@ def _specs() -> list[QuerySpec]:
         # Oracle side: recursive transitive closure over the full
         # quadratic pair set — closure is connectivity-invariant, so
         # the two sides still hash-match.
-        _on_docs(
+        _on(
+            "documents",
             cluster.dedup_cluster_assignment,
             lambda docs: minhash.near_duplicate_edges(docs, use_vocab_ranks=True),
         ),
@@ -2054,7 +2055,7 @@ def _specs() -> list[QuerySpec]:
         # differ from the vocab mode only where LSH banding luck
         # differs — parity on a planted-duplicate corpus is
         # property-tested (tests/test_dedup_cluster.py).
-        _on_docs(cluster.dedup_cluster_assignment, minhash.near_duplicate_edges),
+        _on("documents", cluster.dedup_cluster_assignment, minhash.near_duplicate_edges),
         None,
         ("dedup", "cluster", "production"),
         "production closure: xxhash64 edge feed → star-contraction CC",
@@ -2168,13 +2169,8 @@ def _specs() -> list[QuerySpec]:
         # generator: substring-level clusters from winnowing overlaps.
         # Demonstrates the closure is generic over any verified edge
         # list (MinHash, winnowing, embedding-LSH, ...).
-        # auto-routed closure feed (round-6): probes the exact-dup
-        # collapse ratio, takes the Σk star-edge feed when
-        # collapse bites (dup-heavy corpus) and the pair report
-        # otherwise (measured 1.4× faster on THIS no-exact-dup
-        # corpus); components — and so this query's output and
-        # oracle hash — are identical either way
-        _on_docs(cluster.dedup_cluster_assignment, winnow.closure_pairs_auto),
+        # Star-edge feed: Σk rows, not the report's Σk², same components.
+        _on("documents", cluster.dedup_cluster_assignment, winnow.overlap_edges),
         f"""
         WITH RECURSIVE {_WINNOW_CTES},
         pairs AS (
@@ -2196,8 +2192,7 @@ def _specs() -> list[QuerySpec]:
     ))
     s.append(QuerySpec(
         "dedup_kept_corpus",
-        # auto-routed closure feed: see winnowing_cluster_assignment
-        _on_docs(cluster.kept_corpus_stats, winnow.closure_pairs_auto),
+        _on("documents", cluster.kept_corpus_stats, winnow.overlap_edges),
         f"""
         WITH RECURSIVE {_WINNOW_CTES},
         pairs AS (
@@ -2225,8 +2220,7 @@ def _specs() -> list[QuerySpec]:
     ))
     s.append(QuerySpec(
         "curated_corpus",
-        # auto-routed closure feed: see winnowing_cluster_assignment
-        _on_docs(text.curated_corpus, winnow.closure_pairs_auto),
+        _on("documents", text.curated_corpus, winnow.overlap_edges),
         f"""
         WITH RECURSIVE {_WINNOW_CTES},
         pairs AS (
@@ -3186,9 +3180,7 @@ def _specs() -> list[QuerySpec]:
     ))
     s.append(QuerySpec(
         "snapshot_diff",
-        lambda sp, d: sets.snapshot_diff(
-            _t(sp, d, "customer"), sets.snapshot_mutate(_t(sp, d, "customer"))
-        ),
+        _on("customer", sets.snapshot_diff, sets.snapshot_mutate),
         f"""
         WITH survivors AS (
           SELECT c_custkey,
@@ -3535,13 +3527,6 @@ def _specs() -> list[QuerySpec]:
         "pandas-UDF inference -> aggregation (ABSA analog)",
     ))
 
-    # NOTE: a transformWithStateInPandas twin of the stateful operator
-    # exists (streaming.pipelines.stateful_user_stats_tws) but is not
-    # registered: its state-server protocol requires google.protobuf,
-    # which is unavailable in this container. The applyInPandasWithState
-    # variant above covers the capability; a pytest skips-unless-protobuf
-    # guards the newer API path.
-
     def _stream_jdbc_sink(sp: SparkSession, d: str) -> DataFrame:
         tune_session(sp)
         filtered = (
@@ -3805,9 +3790,7 @@ def _specs() -> list[QuerySpec]:
 
     s.append(QuerySpec(
         "incremental_agg_refresh",
-        lambda sp, d: sets.incremental_agg_refresh(
-            _t(sp, d, "customer"), sets.snapshot_mutate(_t(sp, d, "customer"))
-        ),
+        _on("customer", sets.incremental_agg_refresh, sets.snapshot_mutate),
         f"""
         WITH survivors AS (
           SELECT c_custkey, c_mktsegment,
@@ -5195,8 +5178,7 @@ def _specs() -> list[QuerySpec]:
     ))
     s.append(QuerySpec(
         "governed_corpus",
-        # auto-routed closure feed: see winnowing_cluster_assignment
-        _on_docs(text.governed_corpus, winnow.closure_pairs_auto),
+        _on("documents", text.governed_corpus, winnow.overlap_edges),
         f"""
         WITH RECURSIVE {_WINNOW_CTES},
         pairs AS (

@@ -52,10 +52,9 @@ RUNTIME_CONF: dict[str, str] = {
 }
 
 
-def env_int(name: str, default: int | None) -> int | None:
+def env_int(name: str, default: int) -> int:
     """Integer env knob: unset returns ``default``; a malformed value
-    warns and returns ``default`` instead of raising (several knobs are
-    read at import, where a ValueError would break the package import)."""
+    warns and returns ``default`` instead of raising."""
     raw = os.environ.get(name)
     if raw is None:
         return default
@@ -165,7 +164,7 @@ def bound_reader_batch(spark: SparkSession, sf_dir: str) -> int:
     execution): on a giant-doc dir other tables in the same session
     read with the same smaller batch — survival margin over scan
     micro-efficiency, which is the right trade exactly where this
-    engages. ``SPARK_GRAFT_READER_BATCH`` overrides (0 = leave alone).
+    engages.
     """
     def _restore_default() -> int:
         # Reset the session-global conf on every path that decides the
@@ -177,12 +176,6 @@ def bound_reader_batch(spark: SparkSession, sf_dir: str) -> int:
         spark.conf.set(READER_BATCH_KEY, str(READER_BATCH_DEFAULT))
         return READER_BATCH_DEFAULT
 
-    rows = env_int("SPARK_GRAFT_READER_BATCH", None)
-    if rows is not None:
-        if rows > 0:
-            spark.conf.set(READER_BATCH_KEY, str(rows))
-            return rows
-        return READER_BATCH_DEFAULT  # 0 = explicit leave-alone
     path = os.path.join(sf_dir, "documents.parquet")
     if not os.path.isfile(path):
         return _restore_default()

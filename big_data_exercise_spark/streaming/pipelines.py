@@ -409,83 +409,6 @@ def stateful_user_stats(events: DataFrame) -> DataFrame:
     )
 
 
-def has_tws_protobuf() -> bool:
-    """Whether the transformWithState wire protocol is usable here:
-    the Python↔JVM state server serializes via google.protobuf, which
-    some deployments (this container included) lack."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def stateful_user_stats_tws(events: DataFrame) -> DataFrame:
-    """Same per-user (count, max) operator on the transformWithState
-    API (Spark 4's successor to applyInPandasWithState): typed state
-    handles, timer support, and a RocksDB-only state store — the shape
-    long-running 100 TB streaming state wants (spill-to-disk, changelog
-    checkpointing). Requires the RocksDB provider, set by the caller
-    via ``require_rocksdb_state``, AND a working google.protobuf (the
-    state-server wire protocol).
-
-    Graceful degradation (round-3): where protobuf is missing the
-    operator DELEGATES to :func:`stateful_user_stats` — the
-    applyInPandasWithState twin with the identical output schema and
-    update semantics — instead of failing at first use, so callers get
-    the capability everywhere and the typed-handle upgrade wherever
-    the wire protocol exists.  The semantic equivalence of the two
-    paths is what the streaming test asserts end-to-end."""
-    if not has_tws_protobuf():
-        return stateful_user_stats(events)
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class UserStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.state = handle.getValueState("stats", "n BIGINT, mx DOUBLE")
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self.state.exists():
-                n, mx = self.state.get()
-            else:
-                n, mx = 0, float("-inf")
-            for pdf in rows:
-                n += len(pdf)
-                if len(pdf):
-                    mx = max(mx, float(pdf["value"].max()))
-            self.state.update((n, mx))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "max_value": [mx]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=UserStats(),
-            outputStructType="user_id long, n_events long, max_value double",
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
-def require_rocksdb_state(spark: SparkSession) -> None:
-    """transformWithState supports only the RocksDB state store."""
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-
-
 class _sized_state_store:
     """Right-size streaming STATE partitioning for the duration of one
     query start. The number of state-store instances equals the

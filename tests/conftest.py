@@ -25,20 +25,20 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 # ~90% cutoff with zero failures). The DEFAULT lane — what a bare
 # `pytest tests/` runs — keeps the oracle-parity queries at sf0.001,
 # the plan-property pins and the codec/equivalence pins, and SKIPS
-# every test marked `slow`. Those are the randomized fuzz campaigns and
-# the streaming soak/feed-width sweeps, but also four deterministic
-# gates: the ANSI-identity tests for minhash prod, minhash vocab and
-# ssjoin (test_ansi_safety.py) and the multi-executor local-cluster
-# contract replay (test_local_cluster.py). SPARK_GRAFT_FULL_TESTS=1
-# runs everything.
+# every test marked `slow`: the randomized fuzz campaigns and the
+# streaming soak/feed-width sweeps. The deterministic gates — the
+# ANSI-identity tests for minhash prod, minhash vocab and ssjoin
+# (test_ansi_safety.py) and the multi-executor local-cluster contract
+# replay (test_local_cluster.py) — run in the default lane.
+# SPARK_GRAFT_FULL_TESTS=1 runs everything.
 _FULL = os.environ.get("SPARK_GRAFT_FULL_TESTS", "0") not in ("", "0")
 
 
 def pytest_configure(config):
     config.addinivalue_line(
         "markers",
-        "slow: fuzz/soak lanes plus the ANSI-identity and local-cluster "
-        "gates — skipped unless SPARK_GRAFT_FULL_TESTS=1",
+        "slow: randomized fuzz and streaming soak lanes — skipped unless "
+        "SPARK_GRAFT_FULL_TESTS=1",
     )
 
 

@@ -41,7 +41,6 @@ def _pairs(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-@pytest.mark.slow
 def test_minhash_prod_ansi_identical(ansi):
     """The 100 TB mode (xxhash64 token ids, no vocab) under ANSI: no
     overflow, and pair-for-pair identical output to the permissive
@@ -54,7 +53,6 @@ def test_minhash_prod_ansi_identical(ansi):
     assert len(under_ansi) > 0  # sf0.001 contains planted near-dups
 
 
-@pytest.mark.slow
 def test_minhash_vocab_ansi_identical(ansi):
     """The oracle-replayable vocab-rank mode is also ANSI-clean, and
     the mod-P pre-reduction left its values untouched (the DuckDB
@@ -108,7 +106,6 @@ def test_fixture_dot_ragged_null_under_ansi(ansi):
     assert got_ansi == got_perm == {(1, None), (2, 4.0)}
 
 
-@pytest.mark.slow
 def test_ssjoin_ansi_identical(ansi):
     """Exact and incremental set-similarity joins (masked xxhash64
     token ids) run clean under ANSI."""

@@ -31,7 +31,6 @@ import os
 import subprocess
 import sys
 
-import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -47,7 +46,6 @@ LANE = [
 ]
 
 
-@pytest.mark.slow
 def test_contract_green_under_local_cluster():
     env = dict(
         os.environ,

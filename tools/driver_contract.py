@@ -35,18 +35,18 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
 # Pair-REPORT queries whose output is per-spec quadratic in clique
-# size: on a hostile corpus (tools/gen_skewed.py plants a 10k-doc
-# exact-dup clique → 50M+ pair rows) the toPandas collect blows
+# size: on a hostile corpus (a 10k-doc exact-dup clique → 50M+ pair
+# rows) the toPandas collect blows
 # spark.driver.maxResultSize — a harness capacity limit, not an engine
 # error. Each name here is covered on such corpora by a count-identity
 # / invariance route instead (round-9 judge item 6), so an oversize
 # result is reported as OVERSIZE (non-BAD) with the route named.
 # Names NOT in this map stay BAD on oversize — nothing else covers them.
 OVERSIZE_COVERED = {
-    "minhash_near_duplicates": "tools/skew_verify.py §2 pair-count identity",
-    "minhash_near_duplicates_prod": "tools/skew_verify.py §2 pair-count identity",
-    "exact_jaccard_pairs": "tools/skew_verify.py §2 pair-count identity",
-    "simhash_near_duplicates": "tools/skew_verify.py §2 clique lower bound",
+    "minhash_near_duplicates": "PLANS.md skewed-distribution pair-count identity",
+    "minhash_near_duplicates_prod": "PLANS.md skewed-distribution pair-count identity",
+    "exact_jaccard_pairs": "PLANS.md skewed-distribution pair-count identity",
+    "simhash_near_duplicates": "PLANS.md skewed-distribution clique lower bound",
 }
 
 def _is_oversize(ex: Exception) -> bool:
