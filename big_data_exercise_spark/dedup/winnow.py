@@ -341,7 +341,7 @@ def _shared_pairs(fps: DataFrame, min_shared: int) -> DataFrame:
     """The Σ bucket² fingerprint self-join: qualifying (id1 < id2,
     n_shared ≥ ``min_shared``) pairs over a (doc_id, fp) set table.
     Shared by the quadratic report (:func:`overlap_pairs`) and the
-    rep-level edge path (:func:`_rep_overlap`) — the edge path's
+    rep-level edge feed (:func:`overlap_edges`) — the edge feed's
     correctness contract is pairing-semantics parity with the report,
     so there must be exactly one copy of the pairing semantics."""
     a = fps.select(F.col("doc_id").alias("id1"), "fp")
@@ -355,50 +355,11 @@ def _shared_pairs(fps: DataFrame, min_shared: int) -> DataFrame:
     )
 
 
-def _rep_overlap(
-    documents: DataFrame,
-    min_shared: int,
-    k: int,
-    w: int,
-    max_bucket: int | None,
-):
-    """Representative-level overlap machinery for
-    :func:`overlap_edges`: ``(mem, rep_shared, sz_ok)`` — the
-    member→rep map, the qualifying rep-level pair list (id1 < id2,
-    n_shared ≥ ``min_shared``), and the reps whose own fingerprint
-    count qualifies (rid, n_shared) — i.e. whose exact-dup members
-    pair with EACH OTHER in the full report."""
-    mem, fps = _collapsed_fingerprints(documents, k, w)
-    if max_bucket is not None:
-        # hotness = number of DOCS carrying the fingerprint = Σ cluster
-        # sizes over the reps that carry it (members share rep sets).
-        csize = mem.groupBy("rep_id").agg(F.count("*").alias("cn"))
-        hot = (
-            fps.join(csize, fps.doc_id == csize.rep_id)
-            .groupBy("fp")
-            .agg(F.sum("cn").alias("bsz"))
-        )
-        fps = (
-            fps.join(hot.filter(F.col("bsz") <= max_bucket).select("fp"), "fp")
-            .select("doc_id", "fp")
-            .localCheckpoint(eager=False)
-        )
-    rep_shared = _shared_pairs(fps, min_shared)
-    sz_ok = (
-        fps.groupBy("doc_id")
-        .agg(F.count("*").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-        .select(F.col("doc_id").alias("rid"), "n_shared")
-    )
-    return mem, rep_shared, sz_ok
-
-
 def overlap_edges(
     documents: DataFrame,
     min_shared: int = 20,
     k: int = K,
     w: int = WIN,
-    max_bucket: int | None = None,
 ) -> DataFrame:
     """Connectivity-preserving substring near-dup edges (id1, id2) —
     the winnowing sibling of ``minhash.near_duplicate_edges``: rep-
@@ -409,11 +370,19 @@ def overlap_edges(
     connected member). Components equal those of
     :func:`overlap_pairs`'s quadratic expansion; row count is Σk, not
     Σk² — feed THIS to the dedup closure."""
-    mem, rep_shared, sz_ok = _rep_overlap(documents, min_shared, k, w, max_bucket)
+    mem, fps = _collapsed_fingerprints(documents, k, w)
+    rep_shared = _shared_pairs(fps, min_shared)
+    # reps whose own fingerprint count qualifies: their exact-dup
+    # members pair with EACH OTHER in the full report
+    sz_ok = (
+        fps.groupBy("doc_id")
+        .agg(F.count("*").alias("n_shared"))
+        .filter(F.col("n_shared") >= min_shared)
+        .select(F.col("doc_id").alias("rid"))
+    )
     stars = (
-        mem.join(sz_ok.select("rid"), mem.rep_id == F.col("rid"))
+        mem.join(sz_ok, mem.rep_id == F.col("rid"))
         .filter(F.col("doc_id") != F.col("rep_id"))
         .select(F.col("rep_id").alias("id1"), F.col("doc_id").alias("id2"))
     )
     return rep_shared.select("id1", "id2").unionByName(stars)
-

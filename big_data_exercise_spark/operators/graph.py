@@ -24,33 +24,15 @@ Scale shape (100 TB): the symmetric edge list is materialized once
 (localCheckpoint; DISK_ONLY persist on a cluster) and each iteration
 is one join + one aggregation keyed on node id — the same exchange
 every round, reusable under a pre-repartition. State is one row per
-node. In the distributed regime there is no driver-side collect: the
-node count enters the plan as a broadcast 1-row aggregate, not a
-Python scalar. Below a row-count gate (``_DRIVER_PR_EDGES``, 1 M
-symmetric edges — the same shape as the closure's union-find gate)
-the power iteration runs on the driver over one Arrow ``toPandas`` of
-the already-materialized symmetric edge list: at toy scale each
-distributed round costs ~3 scheduler jobs of pure overhead for a
-graph whose whole edge list moves in well under a second, and the
-integer arithmetic makes the numpy replay EXACT (sums of non-negative
-int64 are order-independent; ``//`` == ``DIV`` on non-negatives), so
-the gate changes the wall, never the output — pinned by
-``test_pagerank_driver_replay_equivalence``.
+node. There is no driver-side collect: the node count enters the plan
+as a broadcast 1-row aggregate, not a Python scalar.
 """
 
 from __future__ import annotations
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 SCALE = 10**12  # fixed-point: rank 1.0 ≙ SCALE
-
-# Driver-solve gate for the power iteration (row count of the
-# SYMMETRIC edge list). Same pattern as dedup/cluster.py's
-# _DRIVER_UF_EDGES: below it, iterating on the driver replaces
-# ~3 scheduler jobs per round; past it, the relational loop runs
-# unchanged (correct at any scale).
-_DRIVER_PR_EDGES = 1_000_000
 
 
 def trade_edges(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
@@ -65,59 +47,10 @@ def trade_edges(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
     )
 
 
-def _driver_pagerank(sym: DataFrame, iters: int, top: int) -> DataFrame | None:
-    """Numpy replay of the power iteration over one Arrow transfer of
-    the symmetric edge list — bit-identical to the relational loop:
-    every quantity is non-negative int64 (``//`` == truncating ``DIV``;
-    integer sums are order-independent) and the worst intermediate,
-    ``85 · Σcontrib ≤ 85 · SCALE = 8.5e13``, is far inside int64.
-
-    Precondition (round-12 advice item): NODE IDS must be
-    non-negative — the kind/entity_id projection uses Python ``%``/
-    ``//`` where the relational loop uses Spark's sign-preserving
-    ``%`` and truncating ``DIV``, which disagree on negatives.
-    ``trade_edges`` ids are non-negative by construction
-    (2·custkey / 2·suppkey+1); a caller feeding the public
-    ``pagerank(edges)`` negative ids gets the relational loop instead
-    (returns None → the caller falls back), never a divergent replay."""
-    import numpy as np
-
-    pdf = sym.toPandas()
-    u = pdf["u"].to_numpy(dtype=np.int64)
-    v = pdf["v"].to_numpy(dtype=np.int64)
-    # Every node occurs as a source in the symmetric closure, so the
-    # sorted unique sources ARE the node set and v maps by bisection.
-    nodes, u_idx = np.unique(u, return_inverse=True)
-    if len(nodes) and int(nodes[0]) < 0:
-        return None  # negative ids: Python // and % diverge from DIV/%
-    v_idx = np.searchsorted(nodes, v)
-    deg = np.bincount(u_idx, minlength=len(nodes)).astype(np.int64)
-    n = len(nodes)
-    r0 = SCALE // max(n, 1)  # an empty graph yields the empty relation
-    r = np.full(n, r0, dtype=np.int64)
-    base = np.int64((15 * r0) // 100)
-    for _ in range(iters):
-        c = r // deg
-        sm = np.zeros(n, dtype=np.int64)
-        np.add.at(sm, v_idx, c[u_idx])
-        r = base + (85 * sm) // 100
-    order = np.lexsort((nodes, -r))[:top]
-    ids = nodes[order]
-    return sym.sparkSession.createDataFrame(
-        pa.table({
-            "kind": pa.array(np.where(ids % 2 == 0, "customer", "supplier")),
-            "entity_id": pa.array(ids // 2),
-            "rank": pa.array(r[order]),
-        })
-    )
-
-
 def pagerank(edges: DataFrame, iters: int = 3, top: int = 20) -> DataFrame:
     """Top-``top`` nodes by damped PageRank after ``iters`` power
     iterations. Output: (kind, entity_id, rank) ordered by rank desc
-    with a total deterministic tie-break on the interleaved node id.
-    Symmetric edge lists of at most ``_DRIVER_PR_EDGES`` rows are
-    solved on the driver; larger ones run the distributed loop."""
+    with a total deterministic tie-break on the interleaved node id."""
     flip = edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     # bipartite + distinct input ⇒ the flipped set is disjoint (id
     # parity differs), so a plain union IS the symmetric closure.
@@ -127,19 +60,6 @@ def pagerank(edges: DataFrame, iters: int = 3, top: int = 20) -> DataFrame:
     # (job-count probe: 32 jobs at sf0.01 with eager rounds; the
     # unrolled lineage is bounded by the fixed iteration count).
     sym = edges.union(flip).localCheckpoint(eager=False)
-    # Gate probe: a FULL count, deliberately (round-12 advice item
-    # considered and measured): the count's job is what materializes
-    # the lazy checkpoint blocks that the driver transfer — or the
-    # distributed loop's degree aggregation — then reads, so it is
-    # shared work, not extra. The suggested limit(gate+1).count()
-    # short-circuit was measured SLOWER at sf0.1 (a GlobalLimit
-    # gathers the first million rows into one task) and, worse, it
-    # materializes only the partitions the limit touched — the
-    # toPandas then re-runs the orders⋈lineitem lineage for the rest.
-    if sym.count() <= _DRIVER_PR_EDGES:
-        res = _driver_pagerank(sym, iters, top)
-        if res is not None:
-            return res  # None → negative node ids → relational loop
     deg = sym.groupBy("u").agg(F.count("*").alias("deg"))
     nn = F.broadcast(deg.agg(F.count("*").alias("n")))
     state = (

@@ -115,3 +115,13 @@ def test_ssjoin_ansi_identical(ansi):
     ansi.conf.set("spark.sql.ansi.enabled", "false")
     assert under_ansi == _pairs(exact_jaccard_pairs(docs, threshold=0.8))
     assert inc_ansi == _pairs(incremental_jaccard_pairs(docs))
+
+
+def test_registry_builder_pins_permissive_mode(ansi):
+    """A registry builder handed a session with ANSI on resets it
+    (``_t`` → ``tune_session``), so a foreign Spark 4 session runs the
+    registry under the permissive semantics the oracle assumes."""
+    from big_data_exercise_spark.plans.registry import all_queries
+
+    all_queries()["top_revenue"].build(ansi, SF_DIR)
+    assert ansi.conf.get("spark.sql.ansi.enabled") == "false"

@@ -1,6 +1,7 @@
 """Result invariance under shuffle parallelism — the sampled CI lane
-of tools/parallelism_sweep.py (which swept all 222 queries × {1, 8,
-32} clean; see PLANS.md). A distributed result must not depend on
+of tools/conf_invariance_sweep.py, whose full-registry runs at
+spark.sql.shuffle.partitions=1 and =32 against the base at 8 are
+recorded in PLANS.md. A distributed result must not depend on
 shuffle layout: per-partition limits, first/last without a total
 order, partition-local tie-breaks and Arrow batch boundaries all
 break exactly here. The sample pins the query shapes most exposed to

@@ -336,7 +336,6 @@ def test_top_k_truncates_below_the_merge_exchange(spark, name):
     "name",
     [
         "dedup_cluster_assignment",  # driver union-find components
-        "pagerank_trade",  # driver replay arm at this scale
         "histogram_domain_fill",
         "exact_value_quantiles",
         "is_empty_probe",

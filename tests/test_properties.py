@@ -405,31 +405,6 @@ def test_edge_report_equivalence_fuzz(spark):
     run()
 
 
-@pytest.mark.slow
-def test_winnow_edges_same_components_capped(spark):
-    """The max_bucket branch of the edge path: rep-level hotness is
-    cluster-size-weighted (Σ member counts per fingerprint), so the
-    cap drops exactly the fingerprints the per-doc report path drops,
-    and the post-cap components still match — including clusters
-    whose every fingerprint is boilerplate-hot (stars must vanish for
-    those, because their members stop pairing in the report too)."""
-    from big_data_exercise_spark.dedup import cluster, winnow
-
-    docs = _planted_dup_corpus(spark)
-    for cap in (4, 40):
-        pairs = winnow.overlap_pairs(docs, max_bucket=cap).select("id1", "id2")
-        edges = winnow.overlap_edges(docs, max_bucket=cap)
-        via_pairs = {
-            r["doc_id"]: (r["cluster_id"], r["keep"])
-            for r in cluster.dedup_cluster_assignment(docs, pairs).collect()
-        }
-        via_edges = {
-            r["doc_id"]: (r["cluster_id"], r["keep"])
-            for r in cluster.dedup_cluster_assignment(docs, edges).collect()
-        }
-        assert via_edges == via_pairs, f"max_bucket={cap}"
-
-
 def test_python_datasource_partitioned_read(spark):
     """The Python DataSource must plan a genuinely partitioned read
     (one id-range per partition, executor-side iterators) and cover
@@ -1815,43 +1790,17 @@ def test_connected_components_uf_gate_equivalence(spark, monkeypatch):
         assert cid <= node
 
 
-def test_pagerank_driver_replay_equivalence(spark, monkeypatch):
-    """Round-11: the driver numpy power iteration (edge count under
-    ``graph._DRIVER_PR_EDGES``) and the relational loop must emit
-    identical rows — the arithmetic is all non-negative int64, so the
-    replay is exact, not approximately equal. Graph mixes a hub, a
-    ring, and leaf nodes so degrees and inflows differ per node."""
-    from big_data_exercise_spark.operators import graph
-
-    edges_py = [(2 * c, 2 * (c % 3) + 1) for c in range(1, 40)]  # 3 hubs
-    edges_py += [(2 * c, 2 * 5 + 1) for c in range(1, 6)]  # extra fan-in
-    edges = spark.createDataFrame(edges_py, "u long, v long").distinct()
-    fast = [tuple(r) for r in graph.pagerank(edges, iters=3, top=25).collect()]
-    monkeypatch.setattr(graph, "_DRIVER_PR_EDGES", -1)
-    slow = [tuple(r) for r in graph.pagerank(edges, iters=3, top=25).collect()]
-    assert fast == slow
-    ranks = [r[2] for r in fast]
-    assert ranks == sorted(ranks, reverse=True)
-
-
-def test_pagerank_negative_ids_fall_back_to_relational(spark, monkeypatch):
-    """Round-12 (advice item): the driver numpy replay uses Python
-    ``//``/``%`` where the relational loop uses Spark's truncating DIV
-    and sign-preserving ``%`` — they diverge on NEGATIVE node ids, so
-    the gate must refuse the driver path for such graphs and the
-    public pagerank(edges) API must still answer through the
-    relational loop, identically at both gate settings."""
+def test_pagerank_negative_ids_use_spark_semantics(spark):
+    """The public pagerank(edges) API accepts negative node ids: the
+    kind/entity_id projection maps them through Spark's sign-preserving
+    ``%`` and truncating DIV (-2 % 2 == 0 → customer, -2 DIV 2 == -1),
+    not Python's flooring ``//``."""
     from big_data_exercise_spark.operators import graph
 
     edges_py = [(-2, 3), (-4, 3), (-2, 5), (6, 5)]
     edges = spark.createDataFrame(edges_py, "u long, v long")
-    gated = [tuple(r) for r in graph.pagerank(edges, iters=2, top=10).collect()]
-    monkeypatch.setattr(graph, "_DRIVER_PR_EDGES", -1)
-    forced = [tuple(r) for r in graph.pagerank(edges, iters=2, top=10).collect()]
-    assert gated == forced and len(gated) > 0
-    # the divergent projection really is exercised: negative ids map
-    # through Spark semantics (-2 % 2 == 0 → customer, -2 DIV 2 == -1)
-    assert ("customer", -1) in {(r[0], r[1]) for r in gated}
+    got = [tuple(r) for r in graph.pagerank(edges, iters=2, top=10).collect()]
+    assert ("customer", -1) in {(r[0], r[1]) for r in got}
 
 
 def test_lsh_candidate_pairs_first_band_unique(spark):

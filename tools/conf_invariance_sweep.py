@@ -8,12 +8,17 @@ repo-default run (sf0.001). Usage:
 Overridden keys are popped from session.RUNTIME_CONF first, so the
 builders' tune_session normalization leaves them alone and every
 expression actually executes under the override (verified after each
-query). Companion axes already swept clean (recorded in PLANS.md):
+query). It is the one conformance runner: a multi-valued axis is
+one run per value against the base at shuffle.partitions=8. Axes
+swept clean (recorded in PLANS.md):
 
-* spark.sql.ansi.enabled=true        — 222 ok / 0 crash / 0 diff
-  (tools/ansi_sweep.py --deep, the first instance of this pattern)
-* shuffle.partitions ∈ {1, 8, 32}    — 222 / 0 / 0
-  (tools/parallelism_sweep.py — three-way, kept separate)
+* spark.sql.ansi.enabled=true        — 231 ok / 0 crash / 0 diff
+  (every expression executes under strictness; the builders' own
+  reset of ANSI on a foreign session is pinned by
+  tests/test_ansi_safety.py)
+* spark.sql.shuffle.partitions=1 and =32 — 231 / 0 / 0 each
+  (results must not depend on shuffle layout: per-partition limits,
+  first/last without a total order, partition-local tie-breaks)
 * spark.sql.adaptive.enabled=false   — 222 ok / 0 crash / 0 diff
   (this tool: results must never depend on AQE replanning)
 * spark.sql.execution.arrow.maxRecordsPerBatch=13 — 223 / 0 / 0
