@@ -1,5 +1,16 @@
-"""Duplicate clustering: near-dup pairs → connected components →
+"""Duplicate clustering: the exact-duplicate collapse every near-dup
+operator runs first, then near-dup pairs → connected components →
 canonical-document selection.
+
+Exact-dup collapse (:func:`exact_dup_collapse`): MinHash, SimHash and
+winnowing all key each doc by a value that fixes its whole pair
+behaviour (token-set md5, simhash, normalized-text md5), run their
+pair search once per distinct key on the representative (min doc_id),
+and expand back. The collapse is ONE window: every keyed row gains a
+``rep_id``, so representative rows are ``doc_id == rep_id``, the
+closure's star edges are a filter (:func:`star_edges`) and the pair
+report expands by joining on ``rep_id`` (:func:`member_pairs`) — no
+reps table, no join back against one.
 
 Pair generation (exact / MinHash / SimHash / embedding-LSH) only says
 "these two docs match"; a training-data pipeline needs the transitive
@@ -27,7 +38,7 @@ quasi-cliques), so diameters are tiny — 3-5 rounds in practice.
 from __future__ import annotations
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 # Max node-label rows the contraction rewrite will force-broadcast.
 # The raw payload is ~16 B/row, but a broadcast materializes as a JVM
@@ -51,6 +62,54 @@ _BROADCAST_LABEL_ROWS = 5_000_000
 # the union-find is O(E α(E)) on ≤ ~16 B/row metadata. Past the gate
 # the Pregel loop runs unchanged — correct at any scale.
 _DRIVER_UF_EDGES = 1_000_000
+
+
+def exact_dup_collapse(keyed: DataFrame, key: str) -> DataFrame:
+    """``keyed`` plus ``rep_id``: the min ``doc_id`` over the rows that
+    share ``key`` (one window, no aggregation to join back). Rows with
+    a NULL key form one group, as in a groupBy. Lazily checkpointed:
+    the representatives' pair search, the star edges and the report
+    expansion all read it, and the window is a shuffle."""
+    return keyed.withColumn(
+        "rep_id", F.min("doc_id").over(Window.partitionBy(key))
+    ).localCheckpoint(eager=False)
+
+
+def star_edges(collapsed: DataFrame) -> DataFrame:
+    """(id1 = rep, id2 = member) for every non-representative row of a
+    collapse: k−1 edges per k-member cluster, connectivity-equivalent
+    to the cluster's k·(k−1)/2 clique. A filter, no join."""
+    return collapsed.filter(F.col("doc_id") != F.col("rep_id")).select(
+        F.col("rep_id").alias("id1"), F.col("doc_id").alias("id2")
+    )
+
+
+def member_pairs(
+    collapsed: DataFrame, rep_pairs: DataFrame, value: str, intra: Column | None
+) -> DataFrame:
+    """Expand a representative-level pair report (id1, id2, ``value``)
+    to member pairs (id1 < id2, ``value``): each rep pair fans out to
+    |A|·|B| member pairs carrying the rep pair's value, and — unless
+    ``intra`` is None — members of one cluster pair with each other at
+    ``intra`` (the value identical keys imply: jaccard 1.0, distance 0).
+    """
+    m1 = collapsed.select(F.col("rep_id").alias("id1"), F.col("doc_id").alias("d1"))
+    m2 = collapsed.select(F.col("rep_id").alias("id2"), F.col("doc_id").alias("d2"))
+    cross = (
+        rep_pairs.join(m1, "id1")
+        .join(m2, "id2")
+        .select(
+            F.least("d1", "d2").alias("id1"),
+            F.greatest("d1", "d2").alias("id2"),
+            value,
+        )
+    )
+    if intra is None:
+        return cross
+    clique = m1.join(
+        m2, (F.col("id1") == F.col("id2")) & (F.col("d1") < F.col("d2"))
+    ).select(F.col("d1").alias("id1"), F.col("d2").alias("id2"), intra.alias(value))
+    return cross.unionByName(clique)
 
 
 def _collect_edge_pairs(df: DataFrame):

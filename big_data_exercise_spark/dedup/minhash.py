@@ -45,6 +45,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from big_data_exercise_spark.dedup.cluster import (
+    exact_dup_collapse,
+    member_pairs,
+    star_edges,
+)
 from big_data_exercise_spark.functions.numeric import round_det_nn
 from big_data_exercise_spark.functions.text import tokens
 
@@ -200,19 +205,20 @@ def _verified_rep_pairs(
     """Shared core of :func:`near_duplicates` and
     :func:`near_duplicate_edges`: exact-dup collapse → signatures →
     LSH banding → exact-Jaccard verify, all at the granularity of
-    DISTINCT token sets. Returns ``(members, reps, verified)`` where
-    ``members`` is (doc_id, fp), ``reps`` is (fp, rep_id) and
-    ``verified`` is the rep-level (id1, id2, jaccard) pair list.
+    DISTINCT token sets. Returns ``(collapsed, verified)``:
+    ``collapsed`` is one (doc_id, toks, fp, rep_id) row per doc (the
+    :func:`cluster.exact_dup_collapse` of the token-set fingerprint)
+    and ``verified`` is the rep-level (id1, id2, jaccard) pair list.
 
     * **Exact-duplicate collapse first.** Docs with identical token
       sets share signatures, LSH buckets, and every Jaccard value, so
       the signature → banding → verify pipeline runs once per DISTINCT
-      set (representative = min doc_id per set fingerprint). Web-scale
-      corpora are 20-50 % exact dups; the bucket-join cost falls
-      quadratically with cluster size. Results expand back through the
-      membership table: same-set pairs are emitted directly with
-      jaccard 1.0 (they share all bands by construction), cross-set
-      rep pairs fan out to member pairs with the rep-level jaccard.
+      set, on the rows with ``doc_id == rep_id``. Web-scale corpora
+      are 20-50 % exact dups; the bucket-join cost falls quadratically
+      with cluster size. The callers expand back through ``rep_id``:
+      same-set pairs at jaccard 1.0 (they share all bands by
+      construction), cross-set rep pairs fan out to member pairs with
+      the rep-level jaccard.
     * **Verify on sorted int token-id arrays** with |A∪B| derived as
       sz1 + sz2 − |A∩B| (never build the union), behind a cheap
       size-ratio prefilter (J ≥ t requires min(sz)/max(sz) ≥ t), so
@@ -230,18 +236,8 @@ def _verified_rep_pairs(
     keyed = doc_token_sets(documents).withColumn(
         "fp", F.md5(F.concat_ws("\x1f", F.sort_array("toks")))
     )
-    members = keyed.select("doc_id", "fp").localCheckpoint(eager=False)
-    reps = (
-        members.groupBy("fp").agg(F.min("doc_id").alias("rep_id"))
-    ).localCheckpoint(eager=False)
-    # explicit renames: the checkpointed frames share exprIds with
-    # keyed's lineage, so attribute-based disambiguation can't tell
-    # the sides apart the way it could pre-checkpoint
-    reps_r = reps.select(F.col("fp").alias("rep_fp"), "rep_id")
-    rep_sets = keyed.join(
-        reps_r,
-        (keyed["fp"] == reps_r["rep_fp"]) & (keyed["doc_id"] == reps_r["rep_id"]),
-    ).select("rep_id", "toks")
+    collapsed = exact_dup_collapse(keyed, "fp")
+    rep_sets = collapsed.filter(F.col("doc_id") == F.col("rep_id"))
 
     # --- per-row token-id arrays on representatives ---------------------
     # Round 11 (guide §2.4 — remove shuffles outright): signatures and
@@ -257,7 +253,7 @@ def _verified_rep_pairs(
     # instead of three aggregations.
     if not use_vocab_ranks:
         rep_ids = rep_sets.select(
-            F.col("rep_id").alias("doc_id"),
+            "doc_id",
             F.array_distinct(
                 F.transform(
                     "toks",
@@ -274,9 +270,7 @@ def _verified_rep_pairs(
         # `WindowExec: No Partition Defined` plan node.
         from big_data_exercise_spark.operators.windows import global_row_number
 
-        exploded = rep_sets.select(
-            F.col("rep_id").alias("doc_id"), F.explode("toks").alias("tok")
-        )
+        exploded = rep_sets.select("doc_id", F.explode("toks").alias("tok"))
         vocab = global_row_number(
             exploded.select("tok").distinct(), ["tok"], "__rn"
         ).select("tok", (F.col("__rn") - 1).alias("tok_id"))
@@ -316,12 +310,12 @@ def _verified_rep_pairs(
     # (round-9 measurement: eager materialization re-read at ONE
     # partition under the 64 MB advisory coalescing and serialized the
     # verify — 5.8 s vs 8.5-9.7 s end-to-end at sf0.1).
-    # Gate on the materialized rep count (reps is already checkpointed;
-    # one cheap scan). Under the gate the bucket join broadcasts its
+    # Gate on the rep count (one scan of the collapse checkpoint).
+    # Under the gate the bucket join broadcasts its
     # build side and the verify set tables broadcast too, so the
     # candidate pairs never hit an exchange; past it every join runs
     # the sort-merge shuffle plan — correct at any scale.
-    _small = reps.count() <= _BROADCAST_SET_ROWS
+    _small = rep_sets.count() <= _BROADCAST_SET_ROWS
     cand = lsh_candidate_pairs(
         sigs, num_hashes, bands, broadcast_build=_small
     ).localCheckpoint(eager=False)
@@ -387,7 +381,7 @@ def _verified_rep_pairs(
         .select("id1", "id2", round_det_nn(jac, 4).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
-    return members, reps, verified
+    return collapsed, verified
 
 
 def near_duplicates(
@@ -401,44 +395,19 @@ def near_duplicates(
 
     Output: (id1, id2, jaccard) for every verified pair ≥ threshold —
     the full quadratic pair REPORT (clique-expanded through the
-    exact-dup membership table; see :func:`_verified_rep_pairs` for
-    the shared pipeline). When the downstream consumer only needs
+    exact-dup collapse's ``rep_id``; see :func:`_verified_rep_pairs`
+    for the shared pipeline). When the downstream consumer only needs
     connectivity — the connected-components closure — use
     :func:`near_duplicate_edges` instead, which carries the same
     components on a linear-size edge list.
     """
-    members, reps, verified = _verified_rep_pairs(
+    collapsed, verified = _verified_rep_pairs(
         documents, threshold, num_hashes, bands, use_vocab_ranks
     )
-
-    # --- expand back to doc pairs --------------------------------------
-    rep_fp = reps.select("rep_id", F.col("fp").alias("rfp"))
-    m1 = members.select(F.col("doc_id").alias("d1"), F.col("fp").alias("fp1"))
-    m2 = members.select(F.col("doc_id").alias("d2"), F.col("fp").alias("fp2"))
-    cross = (
-        verified.join(rep_fp, verified.id1 == rep_fp.rep_id)
-        .select("id2", "jaccard", F.col("rfp").alias("fp1"))
-        .join(rep_fp, F.col("id2") == rep_fp.rep_id)
-        .select("jaccard", "fp1", F.col("rfp").alias("fp2"))
-        .join(m1, "fp1")
-        .join(m2, "fp2")
-        .select(
-            F.least("d1", "d2").alias("id1"),
-            F.greatest("d1", "d2").alias("id2"),
-            "jaccard",
-        )
-    )
-    intra = (
-        m1.join(m2, (m1.fp1 == m2.fp2) & (m1.d1 < m2.d2))
-        .select(
-            F.col("d1").alias("id1"),
-            F.col("d2").alias("id2"),
-            F.lit(1.0).alias("jaccard"),
-        )
-    )
-    if threshold > 1.0:
-        return cross
-    return cross.unionByName(intra)
+    # same-set members pair at jaccard 1.0, which a threshold above 1.0
+    # excludes
+    intra = None if threshold > 1.0 else F.lit(1.0)
+    return member_pairs(collapsed, verified, "jaccard", intra)
 
 
 def near_duplicate_edges(
@@ -462,7 +431,7 @@ def near_duplicate_edges(
     Σk² and Σk rows feeding the closure. Transitive-closure oracles
     over the full pair list agree by construction.
     """
-    members, reps, verified = _verified_rep_pairs(
+    collapsed, verified = _verified_rep_pairs(
         documents, threshold, num_hashes, bands, use_vocab_ranks
     )
     if threshold > 1.0:
@@ -472,14 +441,7 @@ def near_duplicate_edges(
         # vanish too, or the closure over edges would merge clusters
         # the closure over the report leaves as singletons.
         return verified.select("id1", "id2")
-    stars = (
-        members.join(reps, "fp")
-        .filter(F.col("doc_id") != F.col("rep_id"))
-        .select(
-            F.col("rep_id").alias("id1"), F.col("doc_id").alias("id2")
-        )
-    )
-    return verified.select("id1", "id2").unionByName(stars)
+    return verified.select("id1", "id2").unionByName(star_edges(collapsed))
 
 
 def lsh_recall_report(

@@ -5,17 +5,22 @@ bit position over tokens, simhash bit i = (sum_i > 0). Candidates:
 split the 64 bits into four 16-bit bands; docs sharing any band value
 are compared by Hamming distance (bit_count of xor).
 
-All relational: explode → 64 conditional sums in ONE groupBy (a
-single shuffle with map-side combine) → band bucketing join. xxhash64
-is Spark-internal, so this operator is verified by property tests
-(duplicate texts → distance 0; perturbations → small distance), not a
-SQL oracle — recorded as a rows-only check.
+All relational: per-doc array expressions for the 64 bit sums (no
+shuffle) → exact-dup collapse on the simhash value
+(:func:`cluster.exact_dup_collapse`) → band bucketing join over the
+representatives → expansion back to member pairs. xxhash64 is
+Spark-internal, so the production operator is verified by property
+tests (duplicate texts → distance 0; perturbations → small distance),
+not a SQL oracle — recorded as a rows-only check; the
+engine-replayable bit family (:func:`signatures_checked`) carries the
+oracle-checked twin.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from big_data_exercise_spark.dedup.cluster import exact_dup_collapse, member_pairs
 from big_data_exercise_spark.functions.text import tokens
 
 BITS = 64
@@ -173,12 +178,12 @@ def near_duplicates(
     at least one exact band (pigeonhole) → no recall loss vs all-pairs
     at bucket-join cost.
 
-    Like minhash, the signature/banding/join runs once per DISTINCT
-    simhash value (docs with identical token sets — or merely
-    sign-identical bit sums — collapse), then pairs expand back
-    through the membership table: same-hash pairs at distance 0,
-    cross-hash pairs with the representative distance. On duplicative
-    corpora the bucket join shrinks quadratically with cluster size.
+    Like minhash, the banding/join runs once per DISTINCT simhash
+    value (docs with identical token sets — or merely sign-identical
+    bit sums — collapse onto the min doc_id), then pairs expand back
+    through ``rep_id``: same-hash pairs at distance 0, cross-hash
+    pairs with the representative distance. On duplicative corpora
+    the bucket join shrinks quadratically with cluster size.
     """
     if max_distance > BANDS - 1:
         # The pigeonhole guarantee stops at BANDS−1 flipped bits: a
@@ -190,19 +195,14 @@ def near_duplicates(
             f"{BANDS - 1} (got {max_distance}); raise BANDS or use an "
             f"all-pairs verify for larger radii"
         )
-    # Materialization boundary (lazy checkpoint; GC-released):
-    # consumed by the groupBy AND the expansion joins.
     sig_fn = signatures_checked if checked else simhash_signatures
-    sigs = sig_fn(documents).localCheckpoint(eager=False)
-    reps = (
-        sigs.groupBy("simhash")
-        .agg(F.min("doc_id").alias("rep_id"))
-        .localCheckpoint(eager=False)
-    )
+    collapsed = exact_dup_collapse(sig_fn(documents), "simhash")
+    reps = collapsed.filter(F.col("doc_id") == F.col("rep_id"))
 
     banded = None
     for b in range(BANDS):
         piece = reps.select(
+            "doc_id",
             "simhash",
             F.lit(b).alias("band"),
             F.shiftrightunsigned(F.col("simhash"), b * BAND_BITS)
@@ -210,35 +210,20 @@ def near_duplicates(
             .alias("key"),
         )
         banded = piece if banded is None else banded.unionByName(piece)
-    left = banded.select(F.col("simhash").alias("sh1"), "band", "key")
-    right = banded.select(F.col("simhash").alias("sh2"), "band", "key")
-    hash_pairs = (
+    left = banded.select(
+        F.col("doc_id").alias("id1"), F.col("simhash").alias("sh1"), "band", "key"
+    )
+    right = banded.select(
+        F.col("doc_id").alias("id2"), F.col("simhash").alias("sh2"), "band", "key"
+    )
+    rep_pairs = (
         left.join(right, ["band", "key"])
-        .filter(F.col("sh1") < F.col("sh2"))
-        .select("sh1", "sh2", hamming(F.col("sh1"), F.col("sh2")).alias("distance"))
+        .filter(F.col("id1") < F.col("id2"))
+        .select("id1", "id2", hamming(F.col("sh1"), F.col("sh2")).alias("distance"))
         .filter(F.col("distance") <= max_distance)
         .distinct()
     )
-
-    m1 = sigs.select(F.col("doc_id").alias("d1"), F.col("simhash").alias("sh1"))
-    m2 = sigs.select(F.col("doc_id").alias("d2"), F.col("simhash").alias("sh2"))
-    cross = (
-        hash_pairs.join(m1, "sh1")
-        .join(m2, "sh2")
-        .select(
-            F.least("d1", "d2").alias("id1"),
-            F.greatest("d1", "d2").alias("id2"),
-            "distance",
-        )
-    )
-    intra = (
-        m1.join(m2, (m1.sh1 == m2.sh2) & (m1.d1 < m2.d2))
-        .select(
-            F.col("d1").alias("id1"),
-            F.col("d2").alias("id2"),
-            F.lit(0).cast("integer").alias("distance"),
-        )
-    )
-    if max_distance < 0:
-        return cross
-    return cross.unionByName(intra)
+    # same-hash members pair at distance 0, which a negative radius
+    # excludes
+    intra = None if max_distance < 0 else F.lit(0).cast("integer")
+    return member_pairs(collapsed, rep_pairs, "distance", intra)

@@ -27,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
+from big_data_exercise_spark.dedup.cluster import exact_dup_collapse, star_edges
+
 K = 8  # k-gram width (chars)
 WIN = 4  # winnowing window (hashes)
 _POW = [31 ** (K - 1 - j) for j in range(K)]
@@ -170,8 +172,8 @@ def fingerprint_sets(
 
 
 def _collapsed_fingerprints(documents: DataFrame, k: int = K, w: int = WIN):
-    """Exact-dup collapse for the winnowing CLOSURE path, mirroring
-    the MinHash pipeline's discipline (`minhash._verified_rep_pairs`):
+    """Exact-dup collapse for the winnowing CLOSURE path, the same
+    :func:`cluster.exact_dup_collapse` MinHash and SimHash run:
     fingerprint sets are a pure function of the NORMALIZED text
     (printable-ASCII strip, then lowercase — the kernel's own first
     step), so documents with identical normalized text share every
@@ -181,57 +183,43 @@ def _collapsed_fingerprints(documents: DataFrame, k: int = K, w: int = WIN):
     k-member duplicate cluster contributes k²·|fps| rows to the bucket
     join.
 
-    Returns ``(mem, fps)``: ``mem`` maps every doc to its cluster
-    representative (doc_id, rep_id — min doc_id per normalized text),
-    ``fps`` is the (doc_id=rep, fp) fingerprint set table over
-    representatives only.
+    Returns ``(collapsed, fps)``: ``collapsed`` is one (doc_id, rep_id)
+    row per doc (rep = min doc_id per normalized text), ``fps`` is the
+    (doc_id=rep, fp) fingerprint set table over representatives only.
     """
-    from big_data_exercise_spark.tables import ensure_parallelism
-
-    documents = ensure_parallelism(documents)
-    keyed = documents.select("doc_id", "text", F.md5(_norm_text()).alias("nfp"))
-    members = keyed.select("doc_id", "nfp").localCheckpoint(eager=False)
-    # ONE aggregation picks each cluster's representative doc AND its
-    # text (min_by ties the text to the min doc_id) — no join back
-    # against the corpus. A join formulation here is a trap twice
-    # over: a checkpointed input keeps only its pre-checkpoint size
-    # estimate, far past the broadcast threshold, so Catalyst plans a
-    # sort-merge join, and AQE byte-coalesces its exchanges (~1 MB
-    # of rep text → 3 partitions), starving the CPU-bound fingerprint
-    # kernel downstream. The explicit repartition pins kernel
-    # parallelism to the session's shuffle.partitions (the
-    # cluster-sized knob) — AQE never coalesces an explicit N.
-    # shuffle.partitions is not numeric on every platform (managed
-    # runtimes set "auto"); fall back to the cluster's default
-    # parallelism rather than crashing a foreign session.
+    # The collapse window's input is hash-partitioned on the key
+    # EXPLICITLY, at the session's shuffle.partitions (the
+    # cluster-sized knob): the window reuses that exchange, and AQE
+    # never coalesces an explicit N — so the CPU-bound fingerprint
+    # kernel below runs at full parallelism straight off the
+    # collapse's partitions, with no second shuffle. (An exchange AQE
+    # may coalesce is the trap: ~1 MB of text byte-coalesced to 3
+    # partitions once starved this kernel.) shuffle.partitions is
+    # not numeric on every platform (managed runtimes set "auto");
+    # fall back to the cluster's default parallelism rather than
+    # crashing a foreign session.
     try:
         n_shuffle = int(
             documents.sparkSession.conf.get("spark.sql.shuffle.partitions")
         )
     except (TypeError, ValueError):
         n_shuffle = documents.sparkSession.sparkContext.defaultParallelism
-    rep_docs = (
-        keyed.groupBy("nfp")
-        .agg(
-            F.min("doc_id").alias("doc_id"),
-            F.min_by("text", "doc_id").alias("text"),
-        )
-        .repartition(n_shuffle)
-        .localCheckpoint(eager=False)
-    )
+    keyed = documents.select(
+        "doc_id", "text", F.md5(_norm_text()).alias("nfp")
+    ).repartition(n_shuffle, "nfp")
+    collapsed = exact_dup_collapse(keyed, "nfp")
     # pre_partitioned: the explicit repartition above already pins
     # kernel parallelism, and ensure_parallelism's .rdd probe would
     # eagerly materialize the lazy checkpoint (the trap documented in
     # minhash.py — eager materialization gets byte-advisory AQE
     # coalescing instead of parallelismFirst).
-    fps = fingerprint_sets(rep_docs, k, w, pre_partitioned=True).localCheckpoint(
-        eager=False
-    )
-    reps = rep_docs.select("nfp", F.col("doc_id").alias("rep_id"))
-    mem = members.join(reps, "nfp").select(
-        F.col("doc_id").alias("doc_id"), "rep_id"
-    )
-    return mem, fps
+    fps = fingerprint_sets(
+        collapsed.filter(F.col("doc_id") == F.col("rep_id")),
+        k,
+        w,
+        pre_partitioned=True,
+    ).localCheckpoint(eager=False)
+    return collapsed.select("doc_id", "rep_id"), fps
 
 
 def containment_pairs(
@@ -370,19 +358,19 @@ def overlap_edges(
     connected member). Components equal those of
     :func:`overlap_pairs`'s quadratic expansion; row count is Σk, not
     Σk² — feed THIS to the dedup closure."""
-    mem, fps = _collapsed_fingerprints(documents, k, w)
+    collapsed, fps = _collapsed_fingerprints(documents, k, w)
     rep_shared = _shared_pairs(fps, min_shared)
-    # reps whose own fingerprint count qualifies: their exact-dup
-    # members pair with EACH OTHER in the full report
-    sz_ok = (
-        fps.groupBy("doc_id")
-        .agg(F.count("*").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-        .select(F.col("doc_id").alias("rid"))
+    # Star edges only for reps whose own fingerprint count qualifies:
+    # their exact-dup members pair with EACH OTHER in the full report.
+    # The count reaches the star rows through a window over the rep
+    # (one row per rep unioned in), not a join.
+    n_fps = fps.groupBy(F.col("doc_id").alias("id1")).agg(
+        F.count("*").alias("n_fps")
     )
     stars = (
-        mem.join(sz_ok, mem.rep_id == F.col("rid"))
-        .filter(F.col("doc_id") != F.col("rep_id"))
-        .select(F.col("rep_id").alias("id1"), F.col("doc_id").alias("id2"))
+        star_edges(collapsed)
+        .unionByName(n_fps, allowMissingColumns=True)
+        .withColumn("n_fps", F.max("n_fps").over(W.partitionBy("id1")))
+        .filter(F.col("id2").isNotNull() & (F.col("n_fps") >= min_shared))
     )
-    return rep_shared.select("id1", "id2").unionByName(stars)
+    return rep_shared.select("id1", "id2").unionByName(stars.select("id1", "id2"))

@@ -321,13 +321,19 @@ def png_pixel_stats(events: DataFrame) -> DataFrame:
     All outputs are exact integers (constant-fill frames make the
     pixel mean an integer), keeping the comparison float-free."""
 
-    frames = synthesize_png_frames(events)
+    return _pixel_stats(synthesize_png_frames(events), decode_png)
+
+
+def _pixel_stats(frames: DataFrame, decode) -> DataFrame:
+    """Per-camera (n_frames, sum_width, sum_height, sum_mean_pixel)
+    over ``frames`` (camera_id, frame bytes), each frame decoded to a
+    pixel array by ``decode`` inside mapInPandas."""
 
     def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for cam, buf in zip(pdf["camera_id"], pdf["frame"]):
-                img = decode_png(bytes(buf))
+                img = decode(bytes(buf))
                 rows.append(
                     (
                         int(cam),
@@ -401,38 +407,7 @@ def jpeg_pixel_stats(events: DataFrame, resize_width: int = 16) -> DataFrame:
     quantization rounding AND the resize resample bit-for-bit."""
 
     frames = resize_frames(synthesize_jpeg_frames(events), resize_width)
-    return _jpeg_frame_stats(frames)
-
-
-def _jpeg_frame_stats(frames: DataFrame) -> DataFrame:
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for cam, buf in zip(pdf["camera_id"], pdf["frame"]):
-                img = decode_jpeg(bytes(buf))
-                rows.append(
-                    (
-                        int(cam),
-                        int(img.shape[1]),
-                        int(img.shape[0]),
-                        int(img.mean()),
-                    )
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=["camera_id", "width", "height", "mean_pixel"],
-                )
-
-    decoded = frames.mapInPandas(
-        stats, "camera_id long, width int, height int, mean_pixel int"
-    )
-    return decoded.groupBy("camera_id").agg(
-        F.count("*").alias("n_frames"),
-        F.sum("width").cast("long").alias("sum_width"),
-        F.sum("height").cast("long").alias("sum_height"),
-        F.sum("mean_pixel").cast("long").alias("sum_mean_pixel"),
-    )
+    return _pixel_stats(frames, decode_jpeg)
 
 
 def jpeg_progressive_pixel_stats(
@@ -452,7 +427,7 @@ def jpeg_progressive_pixel_stats(
         synthesize_jpeg_frames(events, sample_mod=97, progressive=True),
         resize_width,
     )
-    return _jpeg_frame_stats(frames)
+    return _pixel_stats(frames, decode_jpeg)
 
 
 def synthesize_gradient_png_frames(

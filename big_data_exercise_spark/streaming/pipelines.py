@@ -101,7 +101,6 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_feed = env_int("SPARK_GRAFT_STREAM_FEED_FILES", 1)
     if n_feed > 1:
         feed = _multi_file_feed(spark, sf_dir, n_feed)
-        _note_source_bytes(feed)  # state-partition autotune hint
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
@@ -111,7 +110,6 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # FileStreamSource requires a *directory*; the test data is a single
     # parquet file inside a read-only dir, so stream the parent directory
     # and glob down to just the events file.
-    _note_source_bytes(os.path.join(sf_dir, "events.parquet"))
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)  # micro-batch rate limiting (S2 analog)
@@ -133,7 +131,6 @@ def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-based stream over the documents corpus — the ABSA review
     stream stand-in (S1 over text instead of events)."""
     schema = raw_schema(spark, sf_dir, "documents")
-    _note_source_bytes(os.path.join(sf_dir, "documents.parquet"))
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -409,97 +406,35 @@ def stateful_user_stats(events: DataFrame) -> DataFrame:
     )
 
 
-class _sized_state_store:
-    """Right-size streaming STATE partitioning for the duration of one
-    query start. The number of state-store instances equals the
-    shuffle-partition count at query start — and each instance pays
-    per-micro-batch open/commit/snapshot overhead regardless of how
-    many keys it holds. Inheriting the batch shuffle width (sized for
-    scan/join throughput) makes tiny-keyspace test streams pay 32
-    state stores' fixed costs for a few thousand keys (measured 6.8 s
-    → 1.3 s at sf0.1 tumbling counts with 8 instead of 32). On a real
-    cluster the operator keyspace, not the batch width, should size
-    this; a restarted query keeps the count baked into its checkpoint.
-    """
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-
-    def __enter__(self):
-        self.saved = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set(
-            "spark.sql.shuffle.partitions", str(_state_store_instances(self.spark))
-        )
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.saved)
-
-
-# Source-volume hint for the state-store autotune: the file-based
-# stream builders record their source's total bytes here at plan-build
-# time (a driver-side os.stat sum — no Spark job), and the next query
-# start derives its state-store instance count from it. It is one
-# process-wide slot that every builder call overwrites, so it can be
-# stale: a plan built from two file sources is sized by whichever was
-# built last, a plan built before another query's sources reads that
-# query's bytes, and a plan on a custom source reads the last file
-# source built in the process. Perf-only — state partitioning never
-# changes results. None (nothing recorded, or a failed stat) falls back
-# to the fixed default.
-_LAST_SOURCE_BYTES: dict = {"bytes": None}
-
-# ~bytes of source input per state-store instance. Round-12 interleaved
-# measurement at sf0.1 (24-file feed, best-of-3 + per-rep p50s,
-# /tmp/state_exp2 in OPTIMIZATION_r12.md): 2 instances beat 8 on every
-# rep — stream_tumbling_counts wall 14.0 → 7.8 s, stream_stream_join
-# batch p50 1109 → 671 ms — because per-batch store open/commit
-# dominates tiny keyspaces. The divisor makes the count grow with the
-# corpus (sf0.1 events = 2 MB → 2 instances; ~200 MB → 7; at 100 TB
-# the clamp to the batch shuffle width takes over), so the setting is
-# scale-adaptive rather than tuned to either local mode or the bench.
-_STATE_BYTES_PER_INSTANCE = 32 << 20
-
-
-def _note_source_bytes(path: str) -> None:
-    try:
-        if os.path.isdir(path):
-            total = sum(
-                os.path.getsize(os.path.join(path, p))
-                for p in os.listdir(path)
-                if not p.startswith((".", "_"))
-            )
-        else:
-            total = os.path.getsize(path)
-        _LAST_SOURCE_BYTES["bytes"] = total
-    except OSError:
-        _LAST_SOURCE_BYTES["bytes"] = None
-
-
-def _state_store_instances(spark: SparkSession) -> int:
-    """State-store instance count for one streaming query start: the
-    source-volume derivation (min 2, max the batch shuffle width), or
-    the historical fixed 8 when no source bytes are recorded."""
-    try:
-        width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:  # noqa: BLE001 — conf may be 'auto' on some builds
-        width = 8
-    nbytes = _LAST_SOURCE_BYTES["bytes"]
-    if nbytes is None:
-        return min(8, max(1, width))
-    return max(2, min(width, -(-nbytes // _STATE_BYTES_PER_INSTANCE)))
-
-
 @contextmanager
 def _started(result: DataFrame, writer):
     """Start ``writer`` (a configured ``result.writeStream``) under a
-    fresh scratch checkpoint with right-sized state partitioning; yield
-    the running query, then stop it and remove the checkpoint. The
-    checkpoint lives only for this one run: no runner returns it, so
-    nothing could restart from it."""
+    fresh scratch checkpoint; yield the running query, then stop it and
+    remove the checkpoint. The checkpoint lives only for this one run:
+    no runner returns it, so nothing could restart from it.
+
+    State partitioning: a query's state-store instance count is the
+    shuffle-partition count at its start (then baked into the
+    checkpoint), and each instance pays per-micro-batch
+    open/commit/snapshot costs however few keys it holds. The batch
+    shuffle width is sized for scan/join throughput, so the start runs
+    at ``min(2, width)`` and the width is restored after: at sf0.1 2
+    instances beat 8 on every interleaved rep (stream_tumbling_counts
+    14.0 → 7.8 s, stream_stream_join batch p50 1109 → 671 ms;
+    OPTIMIZATION_r12.md)."""
+    spark = result.sparkSession
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        width = int(saved)
+    except (TypeError, ValueError):  # managed runtimes may say "auto"
+        width = 2
     ckpt = scratch_dir("bdes_ckpt_")
     try:
-        with _sized_state_store(result.sparkSession):
+        spark.conf.set("spark.sql.shuffle.partitions", str(min(2, width)))
+        try:
             q = writer.option("checkpointLocation", ckpt).start()
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", saved)
         try:
             yield q
         finally:

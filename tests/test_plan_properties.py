@@ -141,6 +141,44 @@ def test_winnowing_plan_shapes(spark):
         assert bad not in slow
 
 
+def _first_union(node):
+    if node.nodeName() == "Union":
+        return node
+    kids = node.children()
+    for i in range(kids.size()):
+        hit = _first_union(kids.apply(i))
+        if hit is not None:
+            return hit
+    return None
+
+
+def _node_names(node) -> list[str]:
+    kids = node.children()
+    return [node.nodeName()] + [
+        n for i in range(kids.size()) for n in _node_names(kids.apply(i))
+    ]
+
+
+@pytest.mark.parametrize("family", ["minhash", "winnow"])
+def test_star_edges_need_no_join(spark, family):
+    """The closure feeds' star branch (rep→member edges off the exact-dup
+    collapse) is a filter over the collapse, never a join back against
+    a reps table; the pair branch beside it is where the joins live."""
+    from big_data_exercise_spark.dedup import minhash, winnow
+    from big_data_exercise_spark.tables import load_table
+
+    docs = load_table(spark, SF_DIR, "documents")
+    edges = (
+        minhash.near_duplicate_edges(docs)
+        if family == "minhash"
+        else winnow.overlap_edges(docs)
+    )
+    union = _first_union(edges._jdf.queryExecution().optimizedPlan())
+    pairs, stars = (_node_names(union.children().apply(i)) for i in (0, 1))
+    assert "Join" in pairs
+    assert "Join" not in stars, stars
+
+
 def test_aqe_splits_skewed_join_partitions(spark):
     """The skew story at 100 TB: a hot join key must not serialize the
     stage. With AQE skew-join on (and test-scale thresholds), a 90%-hot

@@ -308,6 +308,74 @@ def test_winnow_edges_same_components(spark):
     assert edges.count() < pairs.count()
 
 
+# Planted exact-dup cliques of size 1-4, plus the texts that carry no
+# tokens or no printable characters: NULL, '' and whitespace-only.
+_CLIQUES = {
+    "alpha bravo charlie delta echo foxtrot golf hotel": [1, 5, 9, 12],
+    "one two three four five six seven eight nine ten": [3, 8],
+    "spark joins shuffle broadcast window exchange sort": [2, 6, 14],
+    "a completely different document with its own words": [4],
+    None: [7, 10],
+    "": [11, 13],
+    "   ": [15, 16],
+    "\t ": [17],
+}
+
+
+def _clique_docs(spark):
+    return _docs(
+        spark, [(i, text) for text, ids in _CLIQUES.items() for i in ids]
+    )
+
+
+@pytest.mark.parametrize("family", ["token_set", "normalized_text"])
+def test_exact_dup_collapse(spark, family):
+    """The one exact-dup collapse, keyed as MinHash (token-set md5 —
+    NULL, '' and whitespace share the empty set) and as winnowing
+    (normalized-text md5 — NULL keys form one group): every doc appears
+    once, rep_id is the min doc_id of its key, and the star edges number
+    docs minus distinct keys."""
+    from collections import defaultdict
+
+    from big_data_exercise_spark.dedup import cluster, minhash, winnow
+
+    docs = _clique_docs(spark)
+    if family == "token_set":
+        keyed = minhash.doc_token_sets(docs).select(
+            "doc_id", F.md5(F.concat_ws("\x1f", F.sort_array("toks"))).alias("k")
+        )
+    else:
+        keyed = docs.select("doc_id", F.md5(winnow._norm_text()).alias("k"))
+    collapsed = cluster.exact_dup_collapse(keyed, "k")
+    rows = collapsed.collect()
+    ids = sorted(i for group in _CLIQUES.values() for i in group)
+    assert sorted(r["doc_id"] for r in rows) == ids
+    groups = defaultdict(list)
+    for r in rows:
+        groups[r["k"]].append(r["doc_id"])
+    assert all(r["rep_id"] == min(groups[r["k"]]) for r in rows)
+    stars = cluster.star_edges(collapsed).collect()
+    assert len(stars) == len(ids) - len(groups)
+    assert all(r["id1"] < r["id2"] for r in stars)
+
+
+def test_simhash_report_expands_planted_cliques(spark):
+    """The SimHash report holds each planted clique's C(k,2) member
+    pairs at distance 0, and texts without tokens pair with nothing."""
+    docs = _clique_docs(spark)
+    pairs = {
+        (r["id1"], r["id2"]): r["distance"]
+        for r in simhash.near_duplicates(docs).collect()
+    }
+    for text, ids in _CLIQUES.items():
+        if text and text.strip():
+            for i, a in enumerate(ids):
+                for b in ids[i + 1:]:
+                    assert pairs.get((a, b)) == 0, (text, a, b)
+        else:
+            assert not [p for p in pairs if set(p) & set(ids)], text
+
+
 def test_hll_reach_contracts_hold_in_dense_mode(spark):
     """The sf0.001/sf0.01 oracle lanes only exercise HLL in sparse
     mode, where union == direct sketching bit-for-bit; at sf0.1 the

@@ -88,6 +88,35 @@ def test_runners_remove_their_checkpoint(spark, tmp_path, monkeypatch):
     assert [p for p in used if os.path.exists(p)] == []
 
 
+def test_state_store_width_is_pinned_for_the_start_only(spark, tmp_path, monkeypatch):
+    """A stateful query starts at ``min(2, shuffle width)`` state-store
+    instances — each instance pays per-batch open/commit costs however
+    few keys it holds — and the session's batch width is back in place
+    once the query has started."""
+    from pyspark.sql.streaming import DataStreamWriter
+
+    started = []
+    start = DataStreamWriter.start
+
+    def spy(self, *args, **kwargs):
+        q = start(self, *args, **kwargs)
+        started.append(q)
+        return q
+
+    monkeypatch.setattr(DataStreamWriter, "start", spy)
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    staged = _staged_events_dir(spark, tmp_path, n_files=2)
+    streams.run_to_memory(streams.tumbling_counts(_stream_staged(spark, staged)))
+    assert spark.conf.get("spark.sql.shuffle.partitions") == width
+    (q,) = started
+    instances = {
+        op.numStateStoreInstances
+        for p in q.recentProgress
+        for op in p.stateOperators
+    }
+    assert instances == {min(2, int(width))}
+
+
 def test_checkpoint_restart_is_exactly_once(spark, tmp_path):
     """Re-running an availableNow foreachBatch sink with the SAME
     checkpoint over the SAME input must append nothing: the checkpoint
