@@ -16,8 +16,9 @@ benched since round 4 (the cross-round ratchet). "queries" (round 12,
 verdict item 1a) carries each query's best-of-reps wall at 2 decimals
 with compact separators so the driver can grade per query straight
 from the line. Full-precision per-query timings, per-rep walls,
-micro-batch latency blocks and error strings go to stderr AND to two
-sidecars: a per-run path bench_detail_sf<sf>_c<cpus>.json (so a
+micro-batch latency blocks, error strings and the driver JVM's sizing
+(``jvm_processors``, ``jvm_default_java_options``) go to stderr AND to
+two sidecars: a per-run path bench_detail_sf<sf>_c<cpus>.json (so a
 scaling run at another core count cannot clobber the headline run's
 evidence) plus the fixed bench_detail_last.json for existing tooling.
 
@@ -272,6 +273,14 @@ def main() -> None:
             file=sys.stderr,
         )
     spark = get_spark("bdes-bench", cpus=cpus, shuffle_partitions=cpus)
+    # How the driver JVM was sized: below the usable cores, get_spark
+    # gives it -XX:ActiveProcessorCount=<cpus> (JIT, GC and pool sizes).
+    jvm_sizing = {
+        "jvm_processors":
+            spark.sparkContext._jvm.java.lang.Runtime.getRuntime().availableProcessors(),
+        "jvm_default_java_options":
+            spark.sparkContext.getConf().get("spark.driver.defaultJavaOptions", None),
+    }
     # Local bench files are single-digit MB; the production 128 MB split
     # size would scan each table in 1-3 tasks and serialize CPU-heavy
     # stages (decimal aggregation, tokenization). 1 MB splits restore
@@ -522,6 +531,7 @@ def main() -> None:
         "latency_feed_files": feed_files,
         "stream_batch_ms": stream_batch_ms,
         "errors": errors,
+        **jvm_sizing,
     }
     # The per-run name is built from the PARSED scale factor, so an sf
     # dir whose name is not a positive number gets no per-run sidecar

@@ -20,6 +20,11 @@ Scale notes (100 TB / 1000-executor target):
 * ``files.maxPartitionBytes`` stays at the 128 MB default: at 100 TB
   that yields ~800k input splits, which Spark's driver handles fine and
   keeps per-task memory bounded.
+* A ``local[N]`` session given fewer cores than the process may run on
+  starts its JVM with ``-XX:ActiveProcessorCount=N``, so JIT compiler
+  threads, GC threads and ``availableProcessors()`` pools are sized to
+  N cores as on an N-core executor, not to the whole host (on a 4-core
+  host at N = 1 the JIT alone used about half of the process's CPU).
 """
 
 from __future__ import annotations
@@ -93,8 +98,17 @@ def scratch_dir(prefix: str) -> str:
     return tempfile.mkdtemp(prefix=prefix, dir=root)
 
 
+def usable_cores() -> int:
+    """The cores this process may run on: its CPU affinity, or the
+    host's count where affinity is unavailable."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except (AttributeError, OSError):
+        return os.cpu_count() or 8
+
+
 def default_parallelism() -> int:
-    return env_int("SPARK_GRAFT_CPUS", os.cpu_count() or 8)
+    return env_int("SPARK_GRAFT_CPUS", usable_cores())
 
 
 def _pin_pythonpath() -> None:
@@ -218,11 +232,18 @@ def get_spark(
     All scale-relevant behavior (partitioning, shuffles, AQE, broadcast
     thresholds) is configured identically to what a cluster deployment
     would use, so plans observed locally are the plans we'd get at scale.
+
+    On ``local[n]`` with ``n`` below :func:`usable_cores` the JVM sees
+    ``n`` processors; ``extra_conf`` may set its own
+    ``spark.driver.defaultJavaOptions``. PySpark keeps one gateway JVM
+    per Python process, so the first session's ``n`` sizes that JVM and
+    later calls in the same process do not resize it.
     """
     _pin_pythonpath()
     n = cpus or default_parallelism()
+    master = os.environ.get("SPARK_GRAFT_MASTER")
     builder = (
-        SparkSession.builder.master(os.environ.get("SPARK_GRAFT_MASTER", f"local[{n}]"))
+        SparkSession.builder.master(master or f"local[{n}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or n))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
@@ -235,6 +256,10 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_WAREHOUSE") or scratch_dir("bdes_wh_"),
         )
     )
+    if not master and n < usable_cores():
+        builder = builder.config(
+            "spark.driver.defaultJavaOptions", f"-XX:ActiveProcessorCount={n}"
+        )
     for k, v in RUNTIME_CONF.items():
         builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():

@@ -1,10 +1,11 @@
 """Process hygiene of the session module: run scratch is removed at
-exit by the process that made it, and malformed integer env knobs fall
-back to their defaults instead of raising; the package reads only
-deployment env settings."""
+exit by the process that made it, malformed integer env knobs fall
+back to their defaults instead of raising, the package reads only
+deployment env settings, and a ``local[N]`` JVM is sized to N cores."""
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import subprocess
@@ -28,18 +29,21 @@ if sys.argv[1] == "fork":
 """
 
 
-def _run_child(tmp_path, mode: str) -> str:
-    env = {**os.environ, "TMPDIR": str(tmp_path), "PYTHONPATH": REPO}
+def _run_child(tmp_path, script: str, *args: str, unset: str = "", **extra: str) -> str:
+    """Run ``script`` in a fresh interpreter with ``unset`` removed from
+    the environment and ``extra`` added; return its stdout."""
+    env = {k: v for k, v in os.environ.items() if k != unset}
+    env.update(extra, TMPDIR=str(tmp_path), PYTHONPATH=REPO)
     r = subprocess.run(
-        [sys.executable, "-c", _CHILD, mode],
-        env=env, capture_output=True, text=True, timeout=120, check=True,
+        [sys.executable, "-c", script, *args],
+        env=env, capture_output=True, text=True, timeout=300, check=True,
     )
     return r.stdout.strip()
 
 
 @pytest.mark.parametrize("mode", ["plain", "fork"])
 def test_scratch_root_removed_at_exit_by_its_creator_only(tmp_path, mode):
-    out = _run_child(tmp_path, mode)
+    out = _run_child(tmp_path, _CHILD, mode)
     if mode == "fork":
         # the grandchild's exit left the child's scratch in place
         assert out == "kept"
@@ -58,9 +62,9 @@ def _in_process(call):
 
 
 def _cpus(request):
-    from big_data_exercise_spark.session import default_parallelism
+    from big_data_exercise_spark.session import default_parallelism, usable_cores
 
-    return default_parallelism(), os.cpu_count() or 8
+    return default_parallelism(), usable_cores()
 
 
 def _feed_files(request):
@@ -119,3 +123,57 @@ def test_package_env_knobs_are_deployment_settings():
                 named |= set(re.findall(r"SPARK_GRAFT_\w+", src))
     assert read - {"PYTHONPATH"} == _DEPLOYMENT_SETTINGS
     assert named == _DEPLOYMENT_SETTINGS
+
+
+_PINNED = """
+import os
+os.sched_setaffinity(0, {min(os.sched_getaffinity(0))})
+from big_data_exercise_spark.session import default_parallelism
+print(default_parallelism())
+"""
+
+
+@pytest.mark.skipif(not hasattr(os, "sched_setaffinity"), reason="no CPU affinity")
+def test_default_parallelism_counts_the_cores_this_process_may_use(tmp_path):
+    """A child pinned to one CPU defaults to local[1], not the host's count."""
+    assert _run_child(tmp_path, _PINNED, unset="SPARK_GRAFT_CPUS") == "1"
+
+
+_JVM = """
+import json, sys
+from big_data_exercise_spark.session import get_spark
+spark = get_spark(cpus=int(sys.argv[1]), extra_conf=json.loads(sys.argv[2]))
+jvm = spark.sparkContext._jvm
+print(json.dumps({
+    "processors": jvm.java.lang.Runtime.getRuntime().availableProcessors(),
+    "probe": jvm.java.lang.System.getProperty("bdes.probe"),
+    "default_opts": spark.sparkContext.getConf().get(
+        "spark.driver.defaultJavaOptions", None),
+}))
+spark.stop()
+"""
+
+
+def _jvm_child(tmp_path, cpus: int, extra_conf: dict) -> dict:
+    """A fresh interpreter, so get_spark starts its own gateway JVM."""
+    out = _run_child(tmp_path, _JVM, str(cpus), json.dumps(extra_conf),
+                     unset="SPARK_GRAFT_MASTER", SPARK_GRAFT_DRIVER_MEM="1g")
+    return json.loads(out.splitlines()[-1])
+
+
+def test_local_one_jvm_sees_one_processor_and_keeps_caller_java_options(tmp_path):
+    """local[1] gets a 1-processor JVM; the caller's extraJavaOptions still apply."""
+    got = _jvm_child(tmp_path, 1, {"spark.driver.extraJavaOptions": "-Dbdes.probe=1"})
+    assert got["processors"] == 1
+    assert got["probe"] == "1"
+
+
+def test_local_at_usable_cores_leaves_the_jvm_unsized(tmp_path):
+    """At N = the usable cores the JVM gets no new option."""
+    from big_data_exercise_spark.session import usable_cores
+
+    cores = usable_cores()
+    if cores < 2:
+        pytest.skip("one-core host: local[1] is already the whole host")
+    got = _jvm_child(tmp_path, cores, {})
+    assert got == {"processors": cores, "probe": None, "default_opts": None}

@@ -95,7 +95,7 @@ def main() -> None:
     from big_data_exercise_spark.tables import TABLES
 
     specs = all_queries()
-    spark = get_spark("closure-sf01", cpus=16, shuffle_partitions=16)
+    spark = get_spark("closure-sf01")
     con = duckdb.connect()
     # At sf1-scale dirs the pair prefix exceeds RAM under DuckDB's
     # default 80%-of-RAM policy (observed: OOM-killed at 110 GB RSS);
