@@ -18,9 +18,9 @@ with compact separators so the driver can grade per query straight
 from the line. Full-precision per-query timings, per-rep walls,
 micro-batch latency blocks, error strings and the driver JVM's sizing
 (``jvm_processors``, ``jvm_default_java_options``) go to stderr AND to
-two sidecars: a per-run path bench_detail_sf<sf>_c<cpus>.json (so a
+one sidecar per run, bench_out/bench_detail_sf<sf>_c<cpus>.json (so a
 scaling run at another core count cannot clobber the headline run's
-evidence) plus the fixed bench_detail_last.json for existing tooling.
+evidence; bench_out/ is git-ignored).
 
 Each query is fully executed through a noop sink (every column
 materialized — count() would let Catalyst prune computed columns) so
@@ -517,13 +517,11 @@ def main() -> None:
         sf = None
     if sf is not None and not (math.isfinite(sf) and sf > 0):
         sf = None
-    # Full detail → sidecar files + stderr above; the FINAL stdout line
-    # stays compact so the driver's 2000-char tail capture always
-    # parses it. Round 12: the detail ALSO lands at a per-run path
-    # (suffixed with sf + core count) so a scaling run at a different
-    # $SPARK_GRAFT_CPUS can no longer clobber the headline run's
-    # per-query evidence (round-11 verdict item 1a); the fixed
-    # bench_detail_last.json path is kept for existing tooling.
+    # Full detail → sidecar file + stderr; the FINAL stdout line stays
+    # compact so the driver's 2000-char tail capture always parses it.
+    # The sidecar path is suffixed with sf + core count so a scaling
+    # run at a different $SPARK_GRAFT_CPUS cannot clobber the headline
+    # run's per-query evidence.
     detail = {
         "queries": timings,
         "rep_walls": rep_walls,
@@ -533,30 +531,22 @@ def main() -> None:
         "errors": errors,
         **jvm_sizing,
     }
-    # The per-run name is built from the PARSED scale factor, so an sf
-    # dir whose name is not a positive number gets no per-run sidecar
-    # (only bench_detail_last.json) instead of a new file named after
-    # whatever the env var held.
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
-    detail_file = (
-        os.path.join(repo_dir, f"bench_detail_sf{sf:g}_c{cpus}.json")
-        if sf is not None
-        else None
-    )
-    for label, path in (
-        ("detail_file", detail_file),
-        ("detail_last", os.path.join(repo_dir, "bench_detail_last.json")),
-    ):
-        if path is None:
-            print(f"# {label}: skipped (sf dir {sf_dir!r} names no scale "
-                  "factor)", file=sys.stderr)
-            continue
+    # The name is built from the PARSED scale factor, so an sf dir
+    # whose name is not a positive number gets no sidecar instead of a
+    # file named after whatever the env var held.
+    if sf is None:
+        print(f"# detail_file: skipped (sf dir {sf_dir!r} names no scale "
+              "factor)", file=sys.stderr)
+    else:
+        out_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_out")
+        path = os.path.join(out_dir, f"bench_detail_sf{sf:g}_c{cpus}.json")
         try:
+            os.makedirs(out_dir, exist_ok=True)
             with open(path, "w", encoding="utf-8") as f:
                 json.dump(detail, f, indent=1, sort_keys=True)
-            print(f"# {label}: {path}", file=sys.stderr)
+            print(f"# detail_file: {path}", file=sys.stderr)
         except OSError as exc:
-            print(f"# {label} write failed: {exc}", file=sys.stderr)
+            print(f"# detail_file write failed: {exc}", file=sys.stderr)
     print(f"# detail: {json.dumps(detail)}", file=sys.stderr)
     out = {
         "metric": "headline_queries_total_wall",

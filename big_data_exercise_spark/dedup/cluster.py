@@ -31,14 +31,16 @@ quasi-cliques), so diameters are tiny — 3-5 rounds in practice.
 * `localCheckpoint(eager=True)` per round cuts the lineage chain —
   without it the plan doubles each iteration and the job dies on
   driver-side planning long before data size matters;
-* convergence is detected with a 1-row aggregate (sum of labels,
-  monotonically non-increasing), not a full frame comparison.
+* convergence is the count of changed labels, observed in the
+  round's own checkpoint job — no probe job, no frame comparison.
 """
 
 from __future__ import annotations
 
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window, functions as F
+
+from big_data_exercise_spark.operators.observe import _counted_checkpoint
 
 # Max node-label rows the contraction rewrite will force-broadcast.
 # The raw payload is ~16 B/row, but a broadcast materializes as a JVM
@@ -201,8 +203,8 @@ def connected_components(
     contraction rewrite) and never shuffled at 2× size.
     """
     # --- phase 0: small graphs solve locally ----------------------
-    # The edge list is checkpointed either way (see docstring); its
-    # count is one cheap scan of cached blocks. Below the gate the
+    # The edge list is checkpointed either way (see docstring), and the
+    # gate's edge count rides that checkpoint's job. Below the gate the
     # whole graph is ≤ ~16 MB of (long, long) metadata — the same
     # bytes a broadcast build would pull to the driver — so components
     # come from one union-find pass instead of the contraction's three
@@ -211,8 +213,8 @@ def connected_components(
     # magnitude (quasi-clique dup graphs), and the CONTRACTED edge
     # list re-enters the same decision; only a pathological contracted
     # graph (> gate reps in long chains) pays the Pregel loop.
-    e = edges.filter(F.col("src") != F.col("dst")).localCheckpoint()
-    if e.count() <= _DRIVER_UF_EDGES:
+    e, m = _counted_checkpoint(edges.filter(F.col("src") != F.col("dst")))
+    if m["n"] <= _DRIVER_UF_EDGES:
         comp = _driver_components(e, "node")
         return nodes.join(F.broadcast(comp), "node", "left").select(
             "node", F.coalesce("cluster_id", F.col("node")).alias("cluster_id")
@@ -222,14 +224,13 @@ def connected_components(
     m1 = e.groupBy("src").agg(F.min("dst").alias("mn")).withColumnRenamed("src", "node")
     m2 = e.groupBy("dst").agg(F.min("src").alias("mn")).withColumnRenamed("dst", "node")
     minn = m1.union(m2).groupBy("node").agg(F.min("mn").alias("mn"))
-    lab = (
-        nodes.join(minn, "node", "left")
-        .select(
+    # checkpointed to cut lineage: the pull-back below must not
+    # re-trigger pair generation
+    lab, m = _counted_checkpoint(
+        nodes.join(minn, "node", "left").select(
             "node",
             F.least(F.col("node"), F.coalesce("mn", F.col("node"))).alias("rep"),
         )
-        .localCheckpoint()  # cut lineage: the pull-back below must not
-        # re-trigger pair generation
     )
     # lab is one row per NODE — corpus-scale, not size-invariant. A
     # checkpointed frame keeps only its pre-checkpoint size estimate
@@ -239,23 +240,18 @@ def connected_components(
     # trap PLANS.md documents); the explicit hint is the measured
     # local win. But force-broadcasting 10⁹ node labels is an executor
     # OOM at the 100 TB regime, so the hint is GATED on the
-    # materialized row count (lab is already checkpointed — the count
-    # is one cheap scan of cached blocks). The final pull-back join
-    # runs its own gate on comp's (much smaller) count below.
-    _maybe = (
-        F.broadcast
-        if lab.count() <= _BROADCAST_LABEL_ROWS
-        else (lambda df: df)
-    )
+    # checkpoint's observed row count. The final pull-back join runs
+    # its own gate on comp's (much smaller) row count below.
+    _maybe = F.broadcast if m["n"] <= _BROADCAST_LABEL_ROWS else (lambda df: df)
     lsrc = lab.select(F.col("node").alias("src"), F.col("rep").alias("rsrc"))
     ldst = lab.select(F.col("node").alias("dst"), F.col("rep").alias("rdst"))
-    ce_dir = (
+    # tiny; checkpointed to avoid re-running the rewrite per union branch
+    ce_dir, m = _counted_checkpoint(
         e.join(_maybe(lsrc), "src")
         .join(_maybe(ldst), "dst")
         .filter(F.col("rsrc") != F.col("rdst"))
         .select(F.col("rsrc").alias("src"), F.col("rdst").alias("dst"))
         .distinct()
-        .localCheckpoint()  # tiny; avoids re-running the rewrite per union branch
     )
     # --- phase 2: components of the contracted graph --------------
     # Fast path (round 11): below the gate, solve the contracted graph
@@ -266,7 +262,7 @@ def connected_components(
     # pull-back join. Reps untouched by any contracted edge keep their
     # own label via the left join's coalesce — exactly the frontier
     # loop's fixpoint for message-less nodes.
-    if ce_dir.count() <= _DRIVER_UF_EDGES:
+    if m["n"] <= _DRIVER_UF_EDGES:
         comp = _driver_components(ce_dir, "rep")
         return (
             lab.join(F.broadcast(comp), "rep", "left")
@@ -286,9 +282,12 @@ def connected_components(
     cnodes = lab.select(F.col("rep").alias("node")).distinct()
 
     # --- phase 2 (fallback): frontier propagation -----------------
-    state = cnodes.select(
-        "node", F.col("node").alias("label"), F.lit(True).alias("chg")
-    ).localCheckpoint()
+    # Every state is checkpointed (plan size stays O(1) per round), and
+    # its job also observes how many labels changed: an empty frontier
+    # is the fixpoint.
+    state, m = _counted_checkpoint(
+        cnodes.select("node", F.col("node").alias("label"), F.lit(True).alias("chg"))
+    )
     for _ in range(max_iter):
         frontier = state.filter("chg").select(
             F.col("node").alias("src"), F.col("label").alias("msg")
@@ -299,34 +298,27 @@ def connected_components(
             .agg(F.min("msg").alias("nbr_label"))
         )
         cur = state.select("node", "label")
-        state = (
-            cur.join(msgs, cur.node == msgs.dst, "left")
-            .select(
+        state, m = _counted_checkpoint(
+            cur.join(msgs, cur.node == msgs.dst, "left").select(
                 cur.node.alias("node"),
                 F.least(cur.label, F.coalesce(msgs.nbr_label, cur.label)).alias(
                     "label"
                 ),
                 (F.coalesce(msgs.nbr_label, cur.label) < cur.label).alias("chg"),
-            )
-            .localCheckpoint()  # cut lineage: plan size stays O(1) per round
+            ),
+            F.count(F.when(F.col("chg"), 1)).alias("changed"),
         )
-        # empty frontier == fixpoint; probe the checkpointed state.
-        if state.filter("chg").limit(1).count() == 0:
+        if m["changed"] == 0:
             break
     comp = state.select(F.col("node").alias("rep"), F.col("label").alias("cluster_id"))
-    # The pull-back join gates on COMP's own count, not lab's: comp is
-    # one row per post-contraction representative — typically orders of
-    # magnitude smaller than lab — so a corpus whose raw label table is
-    # past the broadcast threshold usually still earns the broadcast
-    # fast path here. state is localCheckpointed, so the count is one
-    # cheap scan of cached blocks; skipped when lab already passed
-    # (comp has at most as many rows as lab).
-    _maybe_comp = (
-        F.broadcast
-        if _maybe is F.broadcast or comp.count() <= _BROADCAST_LABEL_ROWS
-        else (lambda df: df)
-    )
-    return lab.join(_maybe_comp(comp), "rep").select("node", "cluster_id")
+    # The pull-back join gates on COMP's own row count (the last
+    # state's), not lab's: comp is one row per post-contraction
+    # representative — typically orders of magnitude smaller than lab —
+    # so a corpus whose raw label table is past the broadcast threshold
+    # usually still earns the broadcast fast path here.
+    if m["n"] <= _BROADCAST_LABEL_ROWS:
+        comp = F.broadcast(comp)
+    return lab.join(comp, "rep").select("node", "cluster_id")
 
 
 def dedup_cluster_assignment(documents: DataFrame, pairs: DataFrame) -> DataFrame:

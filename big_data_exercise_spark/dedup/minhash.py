@@ -225,6 +225,10 @@ def _verified_rep_pairs(
       the expensive intersect runs only on plausibly-similar pairs.
     * The set tables are one compact row per distinct set → Catalyst
       broadcasts them; the candidate table never shuffles for verify.
+    * The set gate keeps a ``rep_sets.count()``: that job is what
+      materializes the lazy collapse checkpoint, which stays lazy
+      because SimHash and winnowing share it and an eager one re-reads
+      at one AQE-coalesced partition (see the ``cand`` note below).
     """
     from big_data_exercise_spark.tables import ensure_parallelism
 
@@ -310,11 +314,12 @@ def _verified_rep_pairs(
     # (round-9 measurement: eager materialization re-read at ONE
     # partition under the 64 MB advisory coalescing and serialized the
     # verify — 5.8 s vs 8.5-9.7 s end-to-end at sf0.1).
-    # Gate on the rep count (one scan of the collapse checkpoint).
-    # Under the gate the bucket join broadcasts its
-    # build side and the verify set tables broadcast too, so the
-    # candidate pairs never hit an exchange; past it every join runs
-    # the sort-merge shuffle plan — correct at any scale.
+    # Gate on the rep count (the job that materializes the lazy
+    # collapse checkpoint; see the docstring). Under the gate the
+    # bucket join broadcasts its build side and the verify set tables
+    # broadcast too, so the candidate pairs never hit an exchange;
+    # past it every join runs the sort-merge shuffle plan — correct at
+    # any scale.
     _small = rep_sets.count() <= _BROADCAST_SET_ROWS
     cand = lsh_candidate_pairs(
         sigs, num_hashes, bands, broadcast_build=_small

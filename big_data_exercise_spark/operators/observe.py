@@ -18,9 +18,22 @@ metric values against independently computed ground truth.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql import Column, DataFrame, Observation, functions as F
 
 from big_data_exercise_spark.functions.numeric import exact_sum
+
+
+def _counted_checkpoint(df: DataFrame, *extra: Column) -> tuple[DataFrame, dict]:
+    """Eager ``localCheckpoint`` of ``df`` and the metrics observed in
+    the checkpoint's own job: ``n`` (the row count) plus each ``extra``
+    aggregate under its alias (an empty frame, even one with no
+    partitions, reads ``n`` = 0). This is how a size gate reads its
+    size: a separate ``count()`` is one or two more jobs over blocks
+    the checkpoint just wrote. The checkpoint must be eager — on a lazy
+    one no job has run when the Observation is read, and it reads 0."""
+    obs = Observation()
+    cp = df.observe(obs, F.count(F.lit(1)).alias("n"), *extra).localCheckpoint()
+    return cp, obs.get
 
 
 def observed_rollup(events: DataFrame, observation: Observation | None = None):

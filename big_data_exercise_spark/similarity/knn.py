@@ -24,8 +24,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
-from big_data_exercise_spark.functions.arrays import EMBEDDING_DIM, cosine as _cosine_any
+from big_data_exercise_spark.functions.arrays import (
+    EMBEDDING_DIM,
+    cosine as _cosine_any,
+    pair_cosine,
+)
 from big_data_exercise_spark.functions.numeric import round_det
+from big_data_exercise_spark.operators.observe import _counted_checkpoint
 
 
 def cosine(a: str, b: str):
@@ -80,60 +85,22 @@ def blocked_near_duplicates(embeddings: DataFrame, threshold: float = 0.35) -> D
     # splits (1 for a small parquet file). AQE coalesces by bytes and
     # cannot see per-row cost — parallelism must be explicit here.
     par = embeddings.sparkSession.sparkContext.defaultParallelism
-    # Verify cosine with the same two-regime plan as lsh.near_duplicates
-    # (see the comment there): id-only candidate pairs + broadcast
-    # gather under the vector-table gate, payload join + Arrow pass
-    # above it. Both kernels run the identical dimension-ordered
-    # float64 accumulation (the unrolled 3×64-term SQL chain overflows
-    # the 64 KB generated-method limit when fused into join stages).
-    # NULL/ragged embeddings still reach the label join and come back
-    # with NULL cos_raw in both regimes — the threshold filter drops
-    # them identically.
-    from big_data_exercise_spark.functions.arrays import (
-        GATHER_GATE_ROWS,
-        arrow_pair_cosine,
-        gathered_pair_cosine,
+    # One counted checkpoint of the vectors: the label join and the
+    # verify read it back instead of recomputing the upstream lineage
+    # per consumer, and the verify's size gate reads its row count from
+    # the checkpoint's own job. (A parquet scan has no shuffle below it,
+    # so the eager checkpoint meets no AQE coalescing.)
+    embeddings, m = _counted_checkpoint(embeddings)
+    a = embeddings.select(F.col("vec_id").alias("id1"), "label").repartition(par)
+    b = embeddings.select(F.col("vec_id").alias("id2"), "label")
+    cand = (
+        a.join(b, "label")
+        .filter(F.col("id1") < F.col("id2"))
+        .select("label", "id1", "id2")
     )
-
-    # Checkpoint before the gate count: the count job then materializes
-    # a lineage cut that every downstream consumer (the label join, the
-    # gather's toPandas) reads back, instead of recomputing the full
-    # upstream embedding lineage per consumer (round-9 advice item).
-    embeddings = embeddings.localCheckpoint(eager=False)
-    if embeddings.count() <= GATHER_GATE_ROWS:
-        a = embeddings.select(
-            F.col("vec_id").alias("id1"), F.col("label").alias("label")
-        ).repartition(par)
-        b = embeddings.select(
-            F.col("vec_id").alias("id2"), F.col("label").alias("label")
-        )
-        cand = (
-            a.join(b, "label")
-            .filter(F.col("id1") < F.col("id2"))
-            .select("label", "id1", "id2")
-        )
-        scored = gathered_pair_cosine(
-            cand,
-            embeddings,
-            "vec_id",
-            "embedding",
-            "id1",
-            "id2",
-            ["label", "id1", "id2"],
-        )
-    else:
-        a = embeddings.select(
-            F.col("vec_id").alias("id1"), F.col("label").alias("label"), F.col("embedding").alias("e1")
-        ).repartition(par)
-        b = embeddings.select(
-            F.col("vec_id").alias("id2"), F.col("label").alias("label"), F.col("embedding").alias("e2")
-        )
-        paired = (
-            a.join(b, "label")
-            .filter(F.col("id1") < F.col("id2"))
-            .select("label", "id1", "id2", "e1", "e2")
-        )
-        scored = arrow_pair_cosine(paired, "e1", "e2", ["label", "id1", "id2"])
+    # NULL/ragged embeddings reach the verify and come back with NULL
+    # cos_raw — the threshold filter drops them.
+    scored = pair_cosine(cand, embeddings, m["n"], ["label", "id1", "id2"])
     return (
         scored.select(
             "label", "id1", "id2", round_det(F.col("cos_raw"), 4).alias("cos_sim")

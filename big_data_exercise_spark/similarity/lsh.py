@@ -39,7 +39,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from big_data_exercise_spark.functions.arrays import pair_cosine
 from big_data_exercise_spark.functions.numeric import round_det, round_det_sql
+from big_data_exercise_spark.operators.observe import _counted_checkpoint
 
 BITS = 16
 BANDS = 4
@@ -176,14 +178,20 @@ def near_duplicates(
     replays the identical construction. Same repartition rationale as
     knn.blocked_near_duplicates: pair verification is CPU-bound on a
     bytes-tiny table."""
+    embeddings, m = _counted_checkpoint(embeddings)
+    return _verified_pairs(embeddings, m["n"], threshold, bits, bands, hp_fn)
+
+
+def _verified_pairs(
+    embeddings: DataFrame, n: int, threshold, bits, bands, hp_fn
+) -> DataFrame:
+    """:func:`near_duplicates` over a counted checkpoint of the vectors
+    (``n`` rows): the band_keys scan and the verify read it back
+    instead of recomputing the upstream lineage once per consumer, and
+    the verify's size gate reads the checkpoint's observed count. (A
+    parquet scan has no shuffle below it, so the eager checkpoint meets
+    no AQE coalescing.)"""
     par = embeddings.sparkSession.sparkContext.defaultParallelism
-    # The regime gate below needs a row count at construction time, so
-    # building this DataFrame necessarily runs one Spark job — cut the
-    # embedding lineage FIRST so that job materializes a checkpoint the
-    # rest of the plan (band_keys scan, gather toPandas / payload join)
-    # reads back, instead of recomputing the full upstream lineage once
-    # per consumer (round-9 advice item).
-    embeddings = embeddings.localCheckpoint(eager=False)
     # Materialization boundary (lazy RDD checkpoint, not persist —
     # blocks free on GC instead of living in the CacheManager): the
     # bucket table feeds BOTH sides of the self-join; the unbounded
@@ -218,45 +226,9 @@ def near_duplicates(
         .filter(F.col("id1") < F.col("id2"))
         .select("id1", "id2")
     )
-    # Exact cosine verify. Two physically different, bit-identical
-    # plans (functions.arrays — both run the same dimension-ordered
-    # float64 accumulation, the left-associative adds of the oracle's
-    # list_sum fold):
-    # * gather (vector table under the broadcast gate): candidates
-    #   stay (long, long) rows and vectors are looked up in a
-    #   broadcast matrix. The candidate set is O(Σ bucket²) — at the
-    #   generated sf1 the payload-join form shipped ~51 GB of per-pair
-    #   float arrays through Arrow; the gather form ships 16 B/pair
-    #   against a ~10 MB broadcast (measured ~18 s for the 63M-pair
-    #   verify stage at sf1; the query end-to-end fell 174 s → 37 s
-    #   together with the shuffle cuts above).
-    # * payload join (above the gate): the original two-sided join +
-    #   arrow_pair_cosine — the correct plan when the vector table
-    #   itself is too big to broadcast; pair traffic then dominates
-    #   either way and the join keeps everything distributed.
-    # The unrolled 3×64-term SQL chain is not an option in either
-    # regime: fused with the verify joins it blew the JVM's 64 KB
-    # generated-method limit and dropped the stage to interpreted
-    # execution. Rounding stays Spark-side.
-    from big_data_exercise_spark.functions.arrays import (
-        GATHER_GATE_ROWS,
-        arrow_pair_cosine,
-        gathered_pair_cosine,
-    )
-
-    if embeddings.count() <= GATHER_GATE_ROWS:
-        scored = gathered_pair_cosine(
-            cand, embeddings, "vec_id", "embedding", "id1", "id2", ["id1", "id2"]
-        )
-    else:
-        a = embeddings.select(
-            F.col("vec_id").alias("id1"), F.col("embedding").alias("e1")
-        )
-        b = embeddings.select(
-            F.col("vec_id").alias("id2"), F.col("embedding").alias("e2")
-        )
-        paired = cand.join(a, "id1").join(b, "id2")
-        scored = arrow_pair_cosine(paired, "e1", "e2", ["id1", "id2"])
+    # Exact cosine verify, gather or id join by the vector count
+    # (functions.arrays.pair_cosine). Rounding stays Spark-side.
+    scored = pair_cosine(cand, embeddings, n, ["id1", "id2"])
     return (
         scored.select("id1", "id2", round_det(F.col("cos_raw"), 4).alias("cos_sim"))
         .filter(F.col("cos_sim") >= threshold)
@@ -316,15 +288,10 @@ def near_duplicates_auto(
     ~10× candidates, not 100×), recall at the threshold held at
     ``recall_target`` by adding bands. The pinned-literal demo above
     stays the oracle-checked entry; this is the production sizing."""
-    embeddings = embeddings.localCheckpoint(eager=False)
-    n = embeddings.count()
-    rows, bands = auto_params(n, threshold, recall_target, occupancy)
-    return near_duplicates(
-        embeddings,
-        threshold,
-        bits=rows * bands,
-        bands=bands,
-        hp_fn=hyperplane_mixed,
+    embeddings, m = _counted_checkpoint(embeddings)
+    rows, bands = auto_params(m["n"], threshold, recall_target, occupancy)
+    return _verified_pairs(
+        embeddings, m["n"], threshold, rows * bands, bands, hyperplane_mixed
     )
 
 

@@ -287,7 +287,9 @@ def pq_topk(
     replication (200k vectors): full-corpus training is 19× the 1×
     wall while the capped path stays flat — training is the ONLY
     superlinear stage, so the cap is what makes the operator scale
-    (PLANS.md round-6)."""
+    (PLANS.md round-6). That count stays a ``count()``: it reads the
+    source scan, and no checkpoint of one row per vector exists to
+    observe it on (``lf`` is the lazy long form, a row per dimension)."""
     lf = _long_with_sub(embeddings, m, n_dims).localCheckpoint(eager=False)
     if train_cap is not None and train_mod == 1:
         n = embeddings.count()

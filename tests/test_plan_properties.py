@@ -395,6 +395,27 @@ def test_driver_built_frames_never_parallelize(spark, monkeypatch, name):
     assert SPECS[name].build(spark, SF_DIR).collect()
 
 
+@pytest.mark.parametrize(
+    "name",
+    [
+        "winnowing_cluster_assignment",  # closure gates
+        "embedding_near_duplicates",  # kNN verify gate
+        "embedding_lsh_near_duplicates",  # LSH verify gate
+    ],
+)
+def test_size_gates_run_no_count_job(spark, monkeypatch, name):
+    """Size gates read their row counts from the checkpoints they
+    already take (an Observation on the eager checkpoint's own job),
+    never from a separate ``DataFrame.count()`` job."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    def _refuse(self):
+        raise AssertionError("DataFrame.count called")
+
+    monkeypatch.setattr(DataFrame, "count", _refuse)
+    assert SPECS[name].build(spark, SF_DIR).collect()
+
+
 def test_grouped_rank_is_range_partitioned(spark):
     """The round-4 ask, pinned at the helper level (checkpoint=False
     exposes the full lineage the lazy localCheckpoint otherwise

@@ -1522,6 +1522,21 @@ def test_observe_metrics_match_ground_truth(spark):
     assert got["value_total"] == truth["value_total"]
 
 
+@pytest.mark.parametrize("keep", ["all", "none"])
+def test_counted_checkpoint_count_equals_count(spark, keep):
+    """The size gates' row count, observed in the eager checkpoint's
+    own job, equals ``count()`` on a non-empty and on an empty frame
+    (0, not None), and the checkpoint holds the same rows."""
+    from big_data_exercise_spark.operators.observe import _counted_checkpoint
+
+    ev = load_table(spark, SF_DIR, "events").select("event_id", "value")
+    df = ev if keep == "all" else ev.filter(F.lit(False))
+    cp, m = _counted_checkpoint(df, F.count("value").alias("n_value"))
+    assert m["n"] == df.count() == cp.count()
+    assert m["n_value"] == df.filter(F.col("value").isNotNull()).count()
+    assert (m["n"] > 0) == (keep == "all")
+
+
 @pytest.mark.slow
 def test_bpe_matches_sequential_reference(spark):
     """The relational BPE (gaps-and-islands greedy-overlap windows) must
@@ -1819,10 +1834,16 @@ def test_corrupt_record_accounting_null_and_empty_payloads(spark):
     assert got == {"a": (5, 3), "b": (2, 1)}
 
 
-def test_connected_components_uf_gate_equivalence(spark, monkeypatch):
+@pytest.mark.parametrize("broadcast_labels", [True, False], ids=["bcast", "smj"])
+def test_connected_components_uf_gate_equivalence(
+    spark, monkeypatch, broadcast_labels
+):
     """Round-11: the driver union-find fast path (edge count under the
     gate) and the contraction + frontier fallback must assign identical
-    labels on a mixed graph — cliques, a long chain, and singletons."""
+    labels on a mixed graph — cliques, a long chain, and singletons.
+    The ``smj`` case also turns the label broadcast off, so the
+    contraction rewrite and the pull-back run as shuffle joins and the
+    pull-back reads its gate from the last frontier state's count."""
     import random
 
     from big_data_exercise_spark.dedup import cluster
@@ -1848,6 +1869,8 @@ def test_connected_components_uf_gate_equivalence(spark, monkeypatch):
     # ~25 (the union-find path has no such bound — it is exact at any
     # diameter, one more reason it is the under-gate default).
     monkeypatch.setattr(cluster, "_DRIVER_UF_EDGES", -1)
+    if not broadcast_labels:
+        monkeypatch.setattr(cluster, "_BROADCAST_LABEL_ROWS", -1)
     slow = {
         r["node"]: r["cluster_id"]
         for r in cluster.connected_components(nodes, edges, max_iter=64).collect()

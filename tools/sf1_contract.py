@@ -1,7 +1,7 @@
 """sf1-scale contract slice (round 9, VERDICT item 5).
 
 Runs the N heaviest oracle-carrying queries — ranked by their
-measured sf0.1 bench walls in ``bench_detail_last.json`` — against a
+measured sf0.1 bench walls in ``bench_detail_sf0.1_c32.json`` — against a
 generated sf1 dir (``tools/gen_sf1.py``), comparing Spark vs DuckDB
 with the exact driver comparator (column-sorted + row-sorted +
 md5 value hash), and records per-query walls for BOTH engines.
@@ -142,7 +142,7 @@ def value_hash(pdf):
 
 def ranked_slice(oracles, top):
     detail = json.load(
-        open(os.path.join(os.path.dirname(__file__), "..", "bench_detail_last.json"))
+        open(os.path.join(os.path.dirname(__file__), "..", "bench_detail_sf0.1_c32.json"))
     )["queries"]
     ranked = [
         n
